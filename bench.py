@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -193,6 +194,21 @@ def _probe_passes(k: int) -> float:
     return acc
 
 
+_CAUSE = re.compile(r"^[A-Za-z_][\w.]*(Error|Exception|Exit|Interrupt|Warning)\b")
+
+
+def root_cause(exc: BaseException) -> str:
+    """Exception class plus the last error line of its text. An error
+    raised in a Python worker arrives as a ``PythonException`` whose
+    first line is a bare header; the worker traceback's last line
+    (e.g. ``ValueError: boom``) is the one that names the cause."""
+    lines = [ln.strip() for ln in str(exc).splitlines() if ln.strip()]
+    cause = next(
+        (ln for ln in reversed(lines) if _CAUSE.match(ln)), lines[-1] if lines else ""
+    )
+    return f"{type(exc).__name__}: {cause[:200]}"
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # derive the sf number from the directory name (".../sf0.1" -> 0.1)
@@ -281,11 +297,7 @@ def main() -> None:
             print(f"[bench] {name} = {times[name]} s", file=sys.stderr, flush=True)
             clear_rdd_storage()
         except Exception as exc:  # noqa: BLE001 — isolate per query
-            # (str() can be empty — e.g. bare RuntimeError() — and
-            # splitlines()[0] on it would crash this handler, which is
-            # the one place that must never crash)
-            first_line = (str(exc).splitlines() or [""])[0]
-            failed[name] = f"{type(exc).__name__}: {first_line[:200]}"
+            failed[name] = root_cause(exc)
             clear_rdd_storage()
 
     total = round(sum(times.values()), 3)

@@ -31,6 +31,55 @@ from pyspark.sql import functions as F
 _PID = "__rank_pid"
 
 
+def _pinned_partition_offsets(
+    df: DataFrame, order_cols: list[Column], aggs: list[Column]
+) -> tuple[DataFrame, list[Column], list[int]]:
+    """Phases 1-2 of the two-phase scheme, shared by the rank and the
+    running-sum helpers.
+
+    Range-partitions ``df`` on ``order_cols`` (tagging each row with
+    its partition id in ``_PID``), pins that assignment, and collects
+    each aggregate in ``aggs`` per partition. Returns ``(ranged,
+    offset_maps, totals)``: ``offset_maps[i]`` is a map literal from
+    partition id to the sum of ``aggs[i]`` over all EARLIER partitions
+    and ``totals[i]`` is its sum over every partition. The collect is
+    O(num_partitions) metadata, independent of data size.
+    """
+    spark = df.sparkSession
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    # localCheckpoint PINS the range partitioning: the aggregate job
+    # below and the caller's final job must see the exact same
+    # row->partition assignment, but RangePartitioner's reservoir
+    # sampling is seeded by the (per-job) RDD id — two executions of
+    # the same plan can pick different boundaries once the input is
+    # large enough to be sampled rather than read whole. Materializing
+    # the shuffled partitions once removes that cross-job
+    # nondeterminism (caught at sf0.1: ranks drifted by up to ±40
+    # between the two jobs).
+    ranged = (
+        df.repartitionByRange(n_parts, *order_cols)
+        .withColumn(_PID, F.spark_partition_id())
+        .localCheckpoint(eager=True)
+    )
+    per_part = {
+        r[_PID]: list(r)[1:] for r in ranged.groupBy(_PID).agg(*aggs).collect()
+    }
+    offsets: dict[int, list[int]] = {}
+    acc = [0] * len(aggs)
+    for pid in sorted(per_part):
+        offsets[pid] = list(acc)
+        acc = [a + (v or 0) for a, v in zip(acc, per_part[pid])]
+    if not offsets:  # empty input: the offset expression is never evaluated
+        offsets = {0: [0] * len(aggs)}
+    offset_maps = [
+        F.create_map(
+            *[F.lit(x) for pid, offs in offsets.items() for x in (pid, offs[i])]
+        )
+        for i in range(len(aggs))
+    ]
+    return ranged, offset_maps, acc
+
+
 def _with_global_rank(
     df: DataFrame, order_cols: list[Column], rank_col: str
 ) -> tuple[DataFrame, int]:
@@ -41,35 +90,8 @@ def _with_global_rank(
     Triggers one counting job; the per-partition counts it collects are
     O(num_partitions), independent of data size.
     """
-    spark = df.sparkSession
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # localCheckpoint PINS the range partitioning: the counts job below
-    # and the caller's final job must see the exact same row->partition
-    # assignment, but RangePartitioner's reservoir sampling is seeded
-    # by the (per-job) RDD id — two executions of the same plan can
-    # pick different boundaries once the input is large enough to be
-    # sampled rather than read whole. Materializing the shuffled
-    # partitions once removes that cross-job nondeterminism (caught at
-    # sf0.1: ranks drifted by up to ±40 between the two jobs).
-    ranged = (
-        df.repartitionByRange(n_parts, *order_cols)
-        .withColumn(_PID, F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    counts = {
-        r[_PID]: r["cnt"]
-        for r in ranged.groupBy(_PID).agg(F.count("*").alias("cnt")).collect()
-    }
-    total = sum(counts.values())
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    if not offsets:  # empty input: rank expression is never evaluated
-        offsets = {0: 0}
-    offset_map = F.create_map(
-        *[F.lit(x) for pid, off in offsets.items() for x in (pid, off)]
+    ranged, (offset_map,), (total,) = _pinned_partition_offsets(
+        df, order_cols, [F.count("*").alias("cnt")]
     )
     # Each range partition is one window group: the per-group state is
     # bounded by the range-partition size, never the full table.
@@ -87,13 +109,9 @@ def global_running_sum(
     """Exact distributed ``SUM(sum_col) OVER (ORDER BY order_cols ROWS
     UNBOUNDED PRECEDING)`` — a global prefix sum with no
     single-partition window, by the same two-phase scheme as
-    :func:`_with_global_rank`:
-
-    1. range-partition on the ordering key and pin the assignment
-       (localCheckpoint — see the rank helper for why);
-    2. collect per-partition TOTALS (O(num_partitions) metadata);
-    3. running value = keyed per-partition cumulative sum + the
-       partition's cumulative offset via a broadcast map literal.
+    :func:`_with_global_rank`: per-partition TOTALS are collected, and
+    the running value is the keyed per-partition cumulative sum plus
+    the partition's cumulative offset.
 
     Backs global-CDF analytics (KS statistic, Lorenz/gains curves)
     that would otherwise need the un-partitioned-window cliff.
@@ -107,39 +125,18 @@ def global_running_sum(
     out_cols = [out_col] if isinstance(out_col, str) else list(out_col)
     if len(sum_cols) != len(out_cols):
         raise ValueError("sum_col and out_col lengths differ")
-    spark = df.sparkSession
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    ranged = (
-        df.repartitionByRange(n_parts, *order_cols)
-        .withColumn(_PID, F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    ranged, offset_maps, _ = _pinned_partition_offsets(
+        df, order_cols, [F.sum(c).alias(f"s{i}") for i, c in enumerate(sum_cols)]
     )
-    totals = {
-        r[_PID]: [r[f"s{i}"] for i in range(len(sum_cols))]
-        for r in ranged.groupBy(_PID)
-        .agg(*[F.sum(c).alias(f"s{i}") for i, c in enumerate(sum_cols)])
-        .collect()
-    }
-    offsets: dict[int, list[int]] = {}
-    acc = [0] * len(sum_cols)
-    for pid in sorted(totals):
-        offsets[pid] = list(acc)
-        acc = [a + (t or 0) for a, t in zip(acc, totals[pid])]
-    if not offsets:
-        offsets = {0: [0] * len(sum_cols)}
     w = (
         Window.partitionBy(_PID)
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    running = []
-    for i, (c, out) in enumerate(zip(sum_cols, out_cols)):
-        offset_map = F.create_map(
-            *[F.lit(x) for pid, offs in offsets.items() for x in (pid, offs[i])]
-        )
-        running.append(
-            (F.sum(c).over(w) + offset_map[F.col(_PID)]).alias(out)
-        )
+    running = [
+        (F.sum(c).over(w) + offset_map[F.col(_PID)]).alias(out)
+        for c, out, offset_map in zip(sum_cols, out_cols, offset_maps)
+    ]
     return ranged.select(*df.columns, *running)
 
 

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.cleaning import clean_money, clean_percent
-from .sources.api_source import fetch_bars
+from .sources.api_source import fetch_bars, synthetic_fetch
 from .sources.lake import read_lake, write_lake
 
 RAW_SCREENER_SCHEMA = (
@@ -73,15 +73,16 @@ def ingest_bars(
     start: str = "2000-01-01",
     end: str = "2024-10-01",
     fetch_fn=None,
-    num_tasks: int | None = None,
 ) -> DataFrame:
     """Fetch stage → partitioned lake. Returns the bar DataFrame (with
     quarantine rows excluded from the lake but reported to the caller).
     """
-    kwargs = {"start": start, "end": end, "num_tasks": num_tasks}
-    if fetch_fn is not None:
-        kwargs["fetch_fn"] = fetch_fn
-    bars = fetch_bars(symbols.select(F.col("Symbol").alias("symbol")), **kwargs)
+    bars = fetch_bars(
+        symbols.select(F.col("Symbol").alias("symbol")),
+        start=start,
+        end=end,
+        fetch_fn=fetch_fn or synthetic_fetch,
+    )
     good = bars.filter(F.col("fetch_error").isNull()).withColumn(
         "year", F.year("bar_date")
     )

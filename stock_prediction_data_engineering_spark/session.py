@@ -15,6 +15,10 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
+# directory that holds the engine package: Python workers need it on
+# their path to unpickle engine UDFs, whatever the working directory
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "stock_prediction_data_engineering_spark",
@@ -60,6 +64,10 @@ def get_spark(
         .config("spark.sql.execution.topKSortFallbackThreshold", "1000000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # --- python boundary: always Arrow ---
+        # a sys.path entry made in this process does not reach the
+        # worker processes, so an engine UDF would fail with
+        # ModuleNotFoundError when Spark starts outside the checkout
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # --- semantics pinned for oracle parity ---

@@ -13,7 +13,7 @@ Two policies deliberately differ from the reference:
 - failures become explicit error rows (quarantine column) instead of
   silently dropped symbols (the reference's :43-45 is a data-loss
   hazard flagged in SURVEY.md §7);
-- rate limiting stays app-level: a per-task token interval, since the
+- rate limiting stays app-level: a per-task token bucket, since the
   engine must not hammer an upstream API with 1000 concurrent tasks.
 
 There is no network in this environment, so the default fetcher is a
@@ -111,26 +111,21 @@ def synthetic_fetch(symbol: str, start: str, end: str) -> pd.DataFrame:
 
 def fetch_bars(
     symbols: DataFrame,
-    symbol_col: str = "symbol",
     start: str = "2000-01-01",
     end: str = "2024-10-01",
     fetch_fn: Callable[[str, str, str], pd.DataFrame] = synthetic_fetch,
     num_tasks: int | None = None,
-    min_interval_sec: float = 0.0,
     requests_per_sec: float | None = None,
     burst: float = 1.0,
-    bucket_factory: Callable[[float, float], "TokenBucket"] | None = None,
 ) -> DataFrame:
-    """The fetch stage: symbols DataFrame -> bar DataFrame.
+    """The fetch stage: a DataFrame with a ``symbol`` column -> bar
+    DataFrame.
 
     ``num_tasks`` bounds concurrent upstream connections (the
-    reference's batch_size=100 analog); ``min_interval_sec`` is the
-    legacy per-task spacing knob. ``requests_per_sec`` is the GLOBAL
-    rate budget, enforced by a per-task :class:`TokenBucket` running
-    at requests_per_sec / P (P = the stage's task count), so aggregate
-    issue rate stays <= the budget under any parallelism.
-    ``bucket_factory(rate, burst)`` is a test seam for injecting a
-    counting clock.
+    reference's batch_size=100 analog). ``requests_per_sec`` is the
+    GLOBAL rate budget, enforced by a per-task :class:`TokenBucket`
+    running at requests_per_sec / P (P = the stage's task count), so
+    aggregate request rate stays <= the budget under any parallelism.
 
     Rate-slicing assumption: the per-task rate is requests_per_sec / P
     with P fixed at plan time. With ``num_tasks`` set (the intended
@@ -142,27 +137,20 @@ def fetch_bars(
     a downstream re-plan adds tasks, letting the aggregate rate exceed
     the budget by the extra tasks' slices plus their startup burst —
     pass ``num_tasks`` whenever ``requests_per_sec`` matters."""
-    src = symbols.select(F.col(symbol_col).alias("symbol"))
+    src = symbols.select("symbol")
     if num_tasks:
         src = src.repartition(num_tasks)
     per_task_rate = None
     if requests_per_sec:
         n_parts = num_tasks or src.rdd.getNumPartitions()
         per_task_rate = requests_per_sec / max(1, n_parts)
-    make_bucket = bucket_factory or TokenBucket
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        last = 0.0
-        bucket = make_bucket(per_task_rate, burst) if per_task_rate else None
+        bucket = TokenBucket(per_task_rate, burst) if per_task_rate else None
         for pdf in batches:
             for sym in pdf["symbol"]:
                 if bucket is not None:
                     bucket.acquire()
-                if min_interval_sec:
-                    wait = last + min_interval_sec - time.monotonic()
-                    if wait > 0:
-                        time.sleep(wait)
-                    last = time.monotonic()
                 try:
                     yield fetch_fn(sym, start, end)
                 except Exception as exc:  # quarantine, don't drop

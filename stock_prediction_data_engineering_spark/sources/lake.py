@@ -50,8 +50,6 @@ def write_lake(
     df: DataFrame,
     path: str,
     partition_cols: tuple[str, ...] = DEFAULT_PARTITION_COLS,
-    compression: str = "snappy",
-    mode: str = "overwrite",
     files_per_partition: int | None = 1,
     sort_cols: tuple[str, ...] | None = None,
     writer_options: dict[str, str] | None = None,
@@ -92,9 +90,9 @@ def write_lake(
     if sort_cols:
         df = df.sortWithinPartitions(*[F.col(c) for c in sort_cols])
     w = (
-        df.write.mode(mode)
+        df.write.mode("overwrite")
         .partitionBy(*partition_cols)
-        .option("compression", compression)
+        .option("compression", "snappy")
     )
     for k, v in (writer_options or {}).items():
         w = w.option(k, v)
@@ -216,12 +214,11 @@ def overwrite_partitions(
     df: DataFrame,
     path: str,
     partition_cols: tuple[str, ...] = DEFAULT_PARTITION_COLS,
-    compression: str = "snappy",
 ) -> None:
     """Partition-scoped incremental update (the reference's "daily
     stock data updates" roadmap, reference README.md:10,49, at lake
-    scale): with dynamic partitionOverwriteMode, an overwrite-mode
-    write replaces ONLY the (company, year) partitions present in
+    scale): with dynamic partitionOverwriteMode, :func:`write_lake`'s
+    overwrite replaces ONLY the (company, year) partitions present in
     ``df`` and leaves every other partition's files untouched — the
     daily batch costs O(changed partitions), not O(lake).
 
@@ -234,11 +231,6 @@ def overwrite_partitions(
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        (
-            df.write.mode("overwrite")
-            .partitionBy(*partition_cols)
-            .option("compression", compression)
-            .parquet(path)
-        )
+        write_lake(df, path, partition_cols, files_per_partition=None)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
