@@ -219,6 +219,7 @@ def main() -> None:
         sf = None
 
     from stock_prediction_data_engineering_spark import registry
+    from stock_prediction_data_engineering_spark.operators.measure import GATES
     from stock_prediction_data_engineering_spark.session import get_spark
 
     probe_start = cpu_probe()
@@ -265,6 +266,9 @@ def main() -> None:
     times: dict[str, float] = {}
     all_runs: dict[str, list[float]] = {}
     failed: dict[str, str] = {}
+    # per query: (site, rows, bytes, strategy) of every measured join
+    # gate its last pass decided (operators/measure.py)
+    gates: dict[str, list] = {}
     for name in HEADLINE_QUERIES:
         fn = registry.QUERIES.get(name)
         if fn is None:
@@ -283,6 +287,7 @@ def main() -> None:
             # the query's uncontended cost, which is the stable quantity.
             runs = []
             for measured in (False, True, True):
+                GATES.clear()
                 t0 = time.perf_counter()
                 df = fn(spark, sf_dir)
                 # force full evaluation of every operator in the plan
@@ -295,6 +300,8 @@ def main() -> None:
             # from host band without re-running (round-7 protocol)
             all_runs[name] = [round(r, 3) for r in runs]
             print(f"[bench] {name} = {times[name]} s", file=sys.stderr, flush=True)
+            if GATES:
+                gates[name] = [list(g) for g in GATES]
             clear_rdd_storage()
         except Exception as exc:  # noqa: BLE001 — isolate per query
             failed[name] = root_cause(exc)
@@ -326,6 +333,7 @@ def main() -> None:
         # host-drift witness: fixed numpy kernel throughput at run
         # start and end; normalize cross-time diffs by t32_meps
         "cpu_probe": {"start": probe_start, "end": cpu_probe()},
+        "gates": gates,
     }
     sidecar_path = os.environ.get(
         "SPARK_GRAFT_BENCH_SIDECAR",

@@ -29,6 +29,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
+from .measure import Measured, _sized, _sized_pair, dup_material, measure, upstream
+
 
 def _spread(df: DataFrame) -> DataFrame:
     """Repartition a document/vector table to the session's shuffle
@@ -64,45 +66,6 @@ _MERSENNE = 2147483647  # 2^31 - 1: keeps a*h+b inside long range
 # d=4,992 (sf0.1/sf1 fixtures) JVM wins by the full constant; d=38,845
 # (sf1u) the kernel already wins; d=377 k (sf10u) it wins 12+ s.
 _VERIFY_KERNEL_MIN_DISTINCT = 20_000
-
-# Join-strategy gates for sides whose PLANNER estimate is unusable —
-# checkpoint-frozen (LogicalRDD keeps the pre-checkpoint guess) or
-# aggregate-shrunk — so the static planner would broadcast them at any
-# scale (the interval-overlap / winnow estimate-blind class; at sf10u
-# it static-broadcast the 6 M-row band table and BOTH ~450 MB shingle
-# array tables). The gates key on a MEASURED row count the pipeline
-# already has (the duplication profile / rep-table count), against a
-# row bound derived from the session's 64 MB broadcast budget and the
-# side's per-row width — scale-adaptive, not fixture-tuned:
-# ~1.3 KB/row for shingle-hash arrays (≈300 int32s at the corpus'
-# ~300-char texts), ~150 B/row for the packed bucket vectors,
-# ~50 B/row for id/hash/count metadata. The ARRAY bound is sized from
-# guide §3.1's broadcast guidance (a few hundred MB is fine; the hard
-# cap is 8 GB / 512 M rows): 400 k rows ≈ 0.5 GB — measured at sf10u
-# (377 k distinct): broadcast verify beats the shuffle_hash
-# alternative by >4x wall (the pair table amplifies each array ~39x
-# through the second attach exchange, ~17 GB vs one 0.5 GB
-# broadcast). Above the bound the pipeline degrades gracefully to
-# shuffle joins instead of dying in a driver-side build.
-_BROADCAST_MAX_ROWS_ARRAY = 400_000
-_BROADCAST_MAX_ROWS_PACKED = 400_000
-_BROADCAST_MAX_ROWS_META = 1_300_000
-# segment-dedup decision tables (~70 B/row: md5 + position struct or
-# dropped-position lists): 3 M rows ≈ 200 MB — the measured-good
-# broadcast at sf10u's 2.9 M segments; sort-merge beyond
-_SEG_BROADCAST_MAX_ROWS = 3_000_000
-# inverted-index gram tables (ngram_jaccard): broadcast while the
-# corpus stays under ~50 k docs (x ~45 grams/doc x ~50 B/row ~ 100 MB),
-# sort-merge beyond — mirrors operators/ssjoin.py's vocab gate
-_SSJ_GRAM_BROADCAST_MAX_DOCS = 50_000
-
-
-def _sized(df: DataFrame, rows: int, budget: int, big: str = "merge") -> DataFrame:
-    """Pick the join strategy for ``df`` from a measured row count:
-    explicit broadcast under ``budget`` rows (where it provably fits
-    and wins), an explicit shuffle-join hint above it (where a static
-    broadcast off a frozen estimate would OOM/stall at scale)."""
-    return F.broadcast(df) if rows <= budget else df.hint(big)
 
 
 def shingle_hashes(shingles: Column) -> Column:
@@ -454,30 +417,27 @@ def minhash_lsh_pairs(
     # members stays scan-partitioned: md5 over the raw text is cheap
     # relative to a full-corpus repartition, and every consumer is an
     # aggregate or a keyed join that shuffles anyway.
-    members = docs.select(
+    members_src = docs.select(
         F.col(id_col).alias("id"),
         F.md5(F.col(text_col).cast("string")).alias("__th"),
-    ).localCheckpoint(eager=False)
-    prof_d: int | None = None
-    prof_n: int | None = None
+    )
+    prof: Measured | None = None
     if output == "clusters":
         # cluster output NEEDS the cluster structure — no collapse
         # decision to make, so DON'T pay the (count + countDistinct)
         # profile aggregate here: the interleaved sf1 A/B measured it
         # at ~1.5 s flat on this path (BENCHDIFF_r10_sf1, 1.6x). The
-        # verify gate's distinct count is read instead off the rep
-        # table the collapse branch materializes anyway (below).
+        # distinct count is read instead off the signature table's
+        # measurement below (one row per representative).
+        members = members_src.localCheckpoint(eager=False)
         collapse = True
     else:
-        prof = members.agg(
-            F.count("*").alias("n"), F.countDistinct("__th").alias("d")
-        ).first()
+        prof = measure(members_src, distinct="__th")
+        members = prof.df
         # collapse pays only when duplicate mass is material: the
         # expansion adds ~4 keyed joins, worth it when clusters shrink
         # the candidate stage, pure overhead for a handful of twins
-        collapse = prof.d * 100 <= prof.n * 95
-        prof_d = prof.d
-        prof_n = prof.n
+        collapse = dup_material(prof.rows, prof.distinct)
     if collapse:
         # Representative selection as ONE aggregate instead of
         # [groupBy + semi-join + full rescan]: within a __th group
@@ -508,13 +468,6 @@ def minhash_lsh_pairs(
         # REP-sized exchange (d rows, never the corpus), noise at
         # sf10u against the stages it parallelizes.
         base_src = _spread(rep_docs.select("id", F.col("__text").alias("__t")))
-        if prof_d is None:
-            # the distinct count = the rep table's row count: a count
-            # over the checkpoint every later stage reuses, so the
-            # only added cost is one job dispatch — the rep aggregate
-            # itself was going to materialize regardless. It feeds the
-            # verify-kernel gate AND the join-strategy gates below.
-            prof_d = rep_docs.count()
     else:
         # direct pipeline: repartition for shingle/signature CPU
         # parallelism (byte-based input splits would underparallelize
@@ -522,23 +475,6 @@ def minhash_lsh_pairs(
         base_src = _spread(docs).select(
             F.col(id_col).alias("id"), F.col(text_col).alias("__t")
         )
-    if verify_kernel == "auto":
-        # The Arrow sort+searchsorted verify kernel wins per pair
-        # (~15 us vs ~110 us for JVM array_intersect's per-row hash-set
-        # build) but pays a flat Python-worker/Arrow round-trip that
-        # only amortizes when the candidate set is large. Candidate
-        # volume scales with DISTINCT text (the pipeline runs on one
-        # representative per distinct text), so the gate reads the
-        # distinct count — from the pairs path's duplication profile,
-        # or from the cluster path's rep-table count above. Measured
-        # crossover sits between d=4,992 (kernel loses ~1.3 s flat,
-        # driver bench sf0.1) and d=38,845 (kernel wins, sf1u); at
-        # d=377 k (sf10u) it wins 12+ s. Both branches are exact on
-        # the distinct hashed-shingle arrays — bit-identical answers
-        # (pinned by tests/test_dedup_similarity.py equivalence test).
-        use_arrow_verify = prof_d >= _VERIFY_KERNEL_MIN_DISTINCT
-    else:
-        use_arrow_verify = verify_kernel == "arrow"
     # The hashed-shingle table feeds three consumers (signatures and
     # both verify sides); a lazy localCheckpoint computes the
     # shingling once per invocation instead of three times. See
@@ -556,7 +492,11 @@ def minhash_lsh_pairs(
     # bound ride the same Arrow pass; the kernel output feeds both the
     # band table and the packed-vector join, so it is checkpointed
     # (id + n + 64-long sig + 16-long packed ≈ 700 B per DISTINCT doc).
-    sp = (
+    # Its measurement is the one construction job of this operator: it
+    # fills the rep, shingle and signature checkpoints, whose stored
+    # bytes then key every join gate below (work the query runs
+    # regardless, moved ahead of planning).
+    sp_m = measure(
         base.select(
             "id",
             F.size("sh_hashes").alias("n"),
@@ -565,8 +505,29 @@ def minhash_lsh_pairs(
             ).alias("sp"),
         )
         .select("id", "n", F.col("sp.sig").alias("sig"), F.col("sp.packed").alias("packed"))
-        .localCheckpoint(eager=False)
     )
+    sp = sp_m.df
+    base_m = upstream(sp_m, base)
+    rep_m = upstream(sp_m, rep_docs) if collapse else None
+    # distinct text count: the profile's, or (cluster path) the rep
+    # table's rows
+    prof_d = prof.distinct if prof is not None else sp_m.rows
+    if verify_kernel == "auto":
+        # The Arrow sort+searchsorted verify kernel wins per pair
+        # (~15 us vs ~110 us for JVM array_intersect's per-row hash-set
+        # build) but pays a flat Python-worker/Arrow round-trip that
+        # only amortizes when the candidate set is large. Candidate
+        # volume scales with DISTINCT text (the pipeline runs on one
+        # representative per distinct text), so the gate reads the
+        # distinct count. Measured crossover sits between d=4,992
+        # (kernel loses ~1.3 s flat, bench.py at sf0.1) and d=38,845
+        # (kernel wins, sf1u); at d=377 k (sf10u) it wins 12+ s. Both
+        # branches are exact on the distinct hashed-shingle arrays —
+        # bit-identical answers (pinned by
+        # tests/test_dedup_similarity.py equivalence test).
+        use_arrow_verify = prof_d >= _VERIFY_KERNEL_MIN_DISTINCT
+    else:
+        use_arrow_verify = verify_kernel == "arrow"
 
     # The band table feeds exactly one consumer (the bucket groupBy
     # below), so it needs no materialization barrier of its own — the
@@ -665,36 +626,16 @@ def minhash_lsh_pairs(
     # joins are pure overhead — gated off below 0.5 (the clusters
     # query verifies at 0.2, where ~60% of candidates genuinely pass
     # and must be exactly intersected anyway). Join strategy gated on
-    # the MEASURED distinct count (_sized): the packed table scales
-    # with distinct text and descends from a checkpoint whose
-    # frozen-tiny size estimate would otherwise force a static
-    # broadcast at every scale (the operators/winnow.py sf10u
+    # the packed table's MEASURED bytes (_sized): it descends from a
+    # checkpoint whose frozen-tiny size estimate would otherwise force
+    # a static broadcast at every scale (the operators/winnow.py sf10u
     # maxResultSize trap) — broadcast is chosen only where the
-    # measured count proves it fits.
+    # measurement proves it fits.
     if jaccard_threshold >= 0.5:
-        pk = sp.select("id", "packed")
-        cands = (
-            cands.join(
-                _sized(
-                    pk.select(
-                        F.col("id").alias("id_a"), F.col("packed").alias("pk_a")
-                    ),
-                    prof_d,
-                    _BROADCAST_MAX_ROWS_PACKED,
-                ),
-                "id_a",
-            )
-            .join(
-                _sized(
-                    pk.select(
-                        F.col("id").alias("id_b"), F.col("packed").alias("pk_b")
-                    ),
-                    prof_d,
-                    _BROADCAST_MAX_ROWS_PACKED,
-                ),
-                "id_b",
-            )
+        pk_a, pk_b = _sized_pair(
+            sp, {"id": "id_{}", "packed": "pk_{}"}, sp_m, "minhash.packed"
         )
+        cands = cands.join(pk_a, "id_a").join(pk_b, "id_b")
         ub = _packed_intersect_ub(F.col("pk_a"), F.col("pk_b"))
         cands = cands.filter(
             F.col("pk_a").isNull()
@@ -705,26 +646,22 @@ def minhash_lsh_pairs(
                 * (F.col("n_a") + F.col("n_b") - ub)
             )
         ).select("id_a", "id_b", "n_a", "n_b")
-    # Array-attach joins, strategy gated on the measured distinct
-    # count: below the budget the (provably small) array table is
-    # explicitly broadcast — the same plan the static planner picked,
-    # now justified by a measurement instead of a frozen checkpoint
-    # estimate. Above it, shuffle_hash: the array side is hashed per
-    # partition (d * ~1.3 KB / parts, a few MB) and the pair side
-    # streams WITHOUT the sort a merge join would impose on millions
-    # of array-carrying rows. At sf10u the static plan used to build
-    # TWO ~450 MB broadcasts of this table (driver-serial, and the
-    # first thing to die at 100 TB).
-    ha = _sized(
-        base.select(F.col("id").alias("id_a"), F.col("sh_hashes").alias("h_a")),
-        prof_d,
-        _BROADCAST_MAX_ROWS_ARRAY,
-        big="shuffle_hash",
-    )
-    hb = _sized(
-        base.select(F.col("id").alias("id_b"), F.col("sh_hashes").alias("h_b")),
-        prof_d,
-        _BROADCAST_MAX_ROWS_ARRAY,
+    # Array-attach joins, strategy gated on the shingle table's
+    # measured bytes: within the budget the (provably small) array
+    # table is explicitly broadcast — the same plan the static planner
+    # picked, now justified by a measurement instead of a frozen
+    # checkpoint estimate. Above it (a large or long-document corpus:
+    # the arrays grow with text length), shuffle_hash: the array side
+    # is hashed per partition and the pair side streams WITHOUT the
+    # sort a merge join would impose on millions of array-carrying
+    # rows. At sf10u the broadcast measured >4x faster than
+    # shuffle_hash (the pair table amplifies each array ~39x through
+    # the second attach exchange).
+    ha, hb = _sized_pair(
+        base,
+        {"id": "id_{}", "sh_hashes": "h_{}"},
+        base_m,
+        "minhash.hashes",
         big="shuffle_hash",
     )
     # local sort of the SKINNY pair table (24 B rows, no exchange)
@@ -784,39 +721,29 @@ def minhash_lsh_pairs(
     if output == "clusters":
         # sizes is a d-row aggregate over a checkpoint scan — gate its
         # join the same way as every other frozen-estimate side (the
-        # planner would otherwise static-broadcast it at any scale)
+        # planner would otherwise static-broadcast it at any scale),
+        # on the rep table's bytes: same d rows, and the text column
+        # makes it the wider of the two
         sizes = members.groupBy("__th").agg(F.count("*").alias("m"))
         rep_sz = reps.select(F.col("id").alias("rid"), "__th").join(
-            _sized(sizes, prof_d, _BROADCAST_MAX_ROWS_META), "__th"
+            _sized(sizes, rep_m, "minhash.cluster_sizes"), "__th"
         )
-        # join strategy gated on the measured distinct count (_sized):
+        # join strategy gated on the measured rep table (_sized):
         # rep_sz scales with distinct content and its lineage passes
         # through an aggregate whose frozen-tiny size estimate would
         # otherwise force a static broadcast at any scale (the
-        # operators/winnow.py sf10u maxResultSize trap); below the
-        # metadata byte budget the broadcast is measured-safe and
-        # skips two shuffles of the verified-pair table
+        # operators/winnow.py sf10u maxResultSize trap); within the
+        # byte budget the broadcast is measured-safe and skips two
+        # shuffles of the verified-pair table
+        sz_a, sz_b = _sized_pair(
+            rep_sz,
+            {"rid": "id_{}", "m": "members_{}"},
+            rep_m,
+            "minhash.cluster_members",
+        )
         cross_cl = (
-            rep_pairs.join(
-                _sized(
-                    rep_sz.select(
-                        F.col("rid").alias("id_a"), F.col("m").alias("members_a")
-                    ),
-                    prof_d,
-                    _BROADCAST_MAX_ROWS_META,
-                ),
-                "id_a",
-            )
-            .join(
-                _sized(
-                    rep_sz.select(
-                        F.col("rid").alias("id_b"), F.col("m").alias("members_b")
-                    ),
-                    prof_d,
-                    _BROADCAST_MAX_ROWS_META,
-                ),
-                "id_b",
-            )
+            rep_pairs.join(sz_a, "id_a")
+            .join(sz_b, "id_b")
             .select(
                 "id_a",
                 "id_b",
@@ -834,8 +761,8 @@ def minhash_lsh_pairs(
             rep_sz.join(
                 _sized(
                     base.filter(F.size("sh_hashes") > 0).select("id"),
-                    prof_d,
-                    _BROADCAST_MAX_ROWS_META,
+                    rep_m,
+                    "minhash.cluster_shingleable",
                 ),
                 F.col("rid") == F.col("id"),
                 "left_semi",
@@ -863,50 +790,20 @@ def minhash_lsh_pairs(
     # the rows the uncollapsed pipeline would have verified one by one.
     # strategy gates: rep_th is d rows, members n rows — both descend
     # from checkpoints whose frozen estimates would static-broadcast
-    # them at any scale; broadcast only where the measured count fits
-    # the metadata byte budget
+    # them at any scale; each broadcasts only where the measured bytes
+    # of its checkpoint (rep table, members profile) fit the budget
     rep_th = reps.select(F.col("id").alias("rid"), "__th")
+    th_a, th_b = _sized_pair(
+        rep_th, {"rid": "id_{}", "__th": "__th_{}"}, rep_m, "minhash.rep_th"
+    )
+    mem_a, mem_b = _sized_pair(
+        members, {"__th": "__th_{}", "id": "{}_id"}, prof, "minhash.members"
+    )
     cross = (
-        rep_pairs.join(
-            _sized(
-                rep_th.select(
-                    F.col("rid").alias("id_a"), F.col("__th").alias("__th_a")
-                ),
-                prof_d,
-                _BROADCAST_MAX_ROWS_META,
-            ),
-            "id_a",
-        )
-        .join(
-            _sized(
-                rep_th.select(
-                    F.col("rid").alias("id_b"), F.col("__th").alias("__th_b")
-                ),
-                prof_d,
-                _BROADCAST_MAX_ROWS_META,
-            ),
-            "id_b",
-        )
-        .join(
-            _sized(
-                members.select(
-                    F.col("__th").alias("__th_a"), F.col("id").alias("a_id")
-                ),
-                prof_n,
-                _BROADCAST_MAX_ROWS_META,
-            ),
-            "__th_a",
-        )
-        .join(
-            _sized(
-                members.select(
-                    F.col("__th").alias("__th_b"), F.col("id").alias("b_id")
-                ),
-                prof_n,
-                _BROADCAST_MAX_ROWS_META,
-            ),
-            "__th_b",
-        )
+        rep_pairs.join(th_a, "id_a")
+        .join(th_b, "id_b")
+        .join(mem_a, "__th_a")
+        .join(mem_b, "__th_b")
         .select(
             F.least("a_id", "b_id").alias("id_a"),
             F.greatest("a_id", "b_id").alias("id_b"),
@@ -922,14 +819,14 @@ def minhash_lsh_pairs(
         base.filter(F.size("sh_hashes") > 0)
         .select("id")
         .join(
-            _sized(rep_th, prof_d, _BROADCAST_MAX_ROWS_META),
+            _sized(rep_th, rep_m, "minhash.shingleable_rep_th"),
             F.col("id") == F.col("rid"),
             "inner",
         )
         .select("__th")
     )
     mm = members.join(
-        _sized(shingleable_th, prof_d, _BROADCAST_MAX_ROWS_META),
+        _sized(shingleable_th, rep_m, "minhash.shingleable_th"),
         "__th",
         "left_semi",
     )
@@ -1413,11 +1310,21 @@ def ngram_jaccard_pairs(
     stopword boilerplate.
     """
     # split↔gram-lambda barrier: an inline split re-evaluates per gram
-    # under CollapseProject (plan-lint 'slice(split(' finding)
-    words_df = _spread(docs).select(
-        F.col(id_col).alias("id"),
-        F.split(F.trim(F.col(text_col)), r"\s+").alias("__ws"),
-    ).localCheckpoint(eager=False)
+    # under CollapseProject (plan-lint 'slice(split(' finding).
+    # The inverted-index self-joins and the verify array attaches all
+    # descend from this checkpoint, whose frozen estimate made the
+    # planner static-broadcast one full copy of the corpus-scaled gram
+    # table at 377 k docs (round-11 estimate-blind-broadcast audit).
+    # Its measurement (materialized by the query anyway) keys every
+    # join strategy below: broadcast while it provably fits,
+    # sort-merge beyond.
+    words_m = measure(
+        _spread(docs).select(
+            F.col(id_col).alias("id"),
+            F.split(F.trim(F.col(text_col)), r"\s+").alias("__ws"),
+        )
+    )
+    words_df = words_m.df
     ws = F.col("__ws")
     grams = F.array_distinct(
         F.transform(
@@ -1429,19 +1336,11 @@ def ngram_jaccard_pairs(
         "id", grams.alias("grams")
     ).withColumn("n_grams", F.size("grams"))
     inv = base.select("id", "n_grams", F.explode("grams").alias("gram"))
-    # measured join gate (round-11 estimate-blind-broadcast audit):
-    # the inverted-index self-joins and the verify array attaches all
-    # descend from the words checkpoint, whose frozen estimate made
-    # the planner static-broadcast one full copy of the corpus-scaled
-    # gram table at 377 k docs. One cheap count over the checkpoint
-    # (materialized by the query anyway) keys the strategy: broadcast
-    # while it provably fits, sort-merge beyond.
-    n_docs = words_df.count()
 
     if max_doc_frequency is None:
         # single-shuffle count path: shared-gram counts double as the
         # exact intersection size because every gram survives
-        inv = _sized(inv, n_docs, _SSJ_GRAM_BROADCAST_MAX_DOCS)
+        inv = _sized(inv, words_m, "ngram.postings")
         l, r = inv.alias("l"), inv.alias("r")
         shared = (
             l.join(r, (F.col("l.gram") == F.col("r.gram")) & (F.col("l.id") < F.col("r.id")))
@@ -1473,8 +1372,8 @@ def ngram_jaccard_pairs(
     )
     capped = _sized(
         inv.join(F.broadcast(hot), "gram", "left_anti"),
-        n_docs,
-        _SSJ_GRAM_BROADCAST_MAX_DOCS,
+        words_m,
+        "ngram.capped_postings",
     )
     lc, rc = capped.alias("l"), capped.alias("r")
     cands = (
@@ -1484,16 +1383,7 @@ def ngram_jaccard_pairs(
     )
     # exact verify on the (candidate-bounded) pair set: join the full
     # gram arrays back so values match the uncapped computation
-    ga = _sized(
-        base.select(F.col("id").alias("id_a"), F.col("grams").alias("g_a")),
-        n_docs,
-        _BROADCAST_MAX_ROWS_ARRAY,
-    )
-    gb = _sized(
-        base.select(F.col("id").alias("id_b"), F.col("grams").alias("g_b")),
-        n_docs,
-        _BROADCAST_MAX_ROWS_ARRAY,
-    )
+    ga, gb = _sized_pair(base, {"id": "id_{}", "grams": "g_{}"}, words_m, "ngram.grams")
     verified = cands.join(ga, "id_a").join(gb, "id_b")
     shared_sz = F.size(F.array_intersect("g_a", "g_b")).cast("double")
     jaccard = shared_sz / (F.size("g_a") + F.size("g_b") - shared_sz)
@@ -1645,7 +1535,7 @@ def embedding_near_dup_pairs(
         prof = src.agg(
             F.count("*").alias("n"), F.countDistinct("vec").alias("d")
         ).first()
-        collapse = prof.d * 100 <= prof.n * 95
+        collapse = dup_material(prof.n, prof.d)
     if collapse:
         reps = src.groupBy("vec").agg(F.min("id").alias("id"))
         base = reps.select("id", "vec").localCheckpoint(eager=False)
@@ -1882,30 +1772,27 @@ def segment_dedup_clean(
     # without a materialization barrier each consumer re-runs the
     # segment construction — the round-10 after-plan still carried TWO
     # Generate posexplode nodes. The checkpoint stores only
-    # (__id, __idx, __h) ≈ 44 B/segment, never text, so the explode +
-    # md5 runs once per invocation.
-    seg_meta = (
+    # (__id, __idx, __h), never text, so the explode + md5 runs once
+    # per invocation.
+    # Join-strategy gate from its MEASUREMENT (the _sized pattern):
+    # firsts and drop_lists are aggregates over checkpoint scans, so
+    # the static planner broadcasts them off frozen estimates at EVERY
+    # scale (round-11 plan audit: both joins were BroadcastHashJoin at
+    # sf10u, a build that happens to win there but is scale-blind).
+    # Both sides have at most seg_meta's rows and no wider columns, so
+    # its stored bytes bound them; the measuring job is work the query
+    # materializes anyway. Beyond the budget the joins degrade to
+    # sort-merge instead of a driver-side build.
+    seg_m = measure(
         with_ws.select(
             F.col("__id"), F.posexplode(segs).alias("__pos0", "__seg")
-        )
-        .select(
+        ).select(
             "__id",
             (F.col("__pos0") + 1).alias("__idx"),
             F.md5(F.col("__seg")).alias("__h"),
         )
-        .localCheckpoint(eager=False)
     )
-    # join-strategy gate from a MEASURED count (the _sized pattern):
-    # firsts and drop_lists are aggregates over checkpoint scans, so
-    # the static planner broadcasts them off frozen estimates at EVERY
-    # scale (round-11 plan audit: both joins were BroadcastHashJoin at
-    # sf10u, a ~200 MB build that happens to win there but is
-    # scale-blind). seg_meta is checkpointed — its count (total
-    # segments, an upper bound for both sides' rows at ~70 B/row) is
-    # one cheap job over work the query materializes anyway; 3 M rows
-    # ≈ 200 MB matches the measured-good sf10u broadcast, beyond that
-    # the joins degrade to sort-merge instead of a driver-side build.
-    seg_count = seg_meta.count()
+    seg_meta = seg_m.df
     firsts = seg_meta.groupBy("__h").agg(
         F.count("*").alias("__cnt"),
         F.min(F.struct("__id", "__idx")).alias("__first"),
@@ -1913,7 +1800,7 @@ def segment_dedup_clean(
     # dropped = duplicated segment occurrences that are not the
     # canonical first: exactly the complement of the old kept filter
     drops = seg_meta.join(
-        _sized(firsts, seg_count, _SEG_BROADCAST_MAX_ROWS), "__h"
+        _sized(firsts, seg_m, "segment.firsts"), "__h"
     ).filter(
         (F.col("__cnt") > 1)
         & ~(
@@ -1931,7 +1818,7 @@ def segment_dedup_clean(
     # old collect_list form did
     kept_idx = F.array_except(F.sequence(F.lit(1), n_seg), dropped)
     return with_ws.join(
-        _sized(drop_lists, seg_count, _SEG_BROADCAST_MAX_ROWS),
+        _sized(drop_lists, seg_m, "segment.drop_lists"),
         "__id",
         "left",
     ).select(

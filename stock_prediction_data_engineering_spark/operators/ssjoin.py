@@ -29,21 +29,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-from .dedup import (
-    _BROADCAST_MAX_ROWS_ARRAY,
-    _BROADCAST_MAX_ROWS_META,
-    _intersect_counts_np,
-    _sized,
-)
-
-# d (distinct texts) above which the gram-df and prefix tables stop
-# being broadcast: vocabulary scales ~linearly with distinct text
-# (pseudo-unique corpora), so 50 k docs x ~45 grams/doc x ~50 B/row
-# ~ 100 MB is the last measured-sane build; beyond, sort-merge. The
-# round-11 plan audit found the static planner broadcasting the
-# 16 M-row gram-df table and one full prefix side at 377 k docs
-# (~GB-class builds that only survive in local mode).
-_SSJ_BROADCAST_MAX_D_VOCAB = 50_000
+from .dedup import _intersect_counts_np
+from .measure import _sized, _sized_pair, dup_material, measure, upstream
 
 
 def split_words(text: Column | str) -> Column:
@@ -143,17 +130,18 @@ def jaccard_similarity_join(
     # over (id, content-hash); a dup-free corpus runs the direct
     # pipeline and skips the expansion joins entirely.
     src = docs.repartition(par, id_col)
-    members = src.select(
-        F.col(id_col).alias("id"),
-        F.md5(F.col(text_col).cast("string")).alias("__th"),
-    ).localCheckpoint(eager=False)
-    prof = members.agg(
-        F.count("*").alias("n"), F.countDistinct("__th").alias("d")
-    ).first()
+    prof = measure(
+        src.select(
+            F.col(id_col).alias("id"),
+            F.md5(F.col(text_col).cast("string")).alias("__th"),
+        ),
+        distinct="__th",
+    )
+    members = prof.df
     # collapse pays only when duplicate mass is material: the
     # expansion adds ~4 keyed joins, worth it when clusters shrink
     # the candidate stage, pure overhead for a handful of twins
-    collapse = prof.d * 100 <= prof.n * 95
+    collapse = dup_material(prof.rows, prof.distinct)
     if collapse:
         reps = members.groupBy("__th").agg(F.min("id").alias("id"))
         src = src.join(
@@ -192,12 +180,20 @@ def jaccard_similarity_join(
     # persist(MEMORY_AND_DISK) + explicit unpersist if running
     # under preemptible executors.
     arrs = arrs.localCheckpoint(eager=False)
+    # Join gates: the gram df and prefix tables are gram-string-sized
+    # and key on the whole checkpoint; the verify attaches broadcast
+    # only (id, harr, n), a fraction of it (the strings dominate: at
+    # 377 k docs 734 MB vs 200 MB), so their gate measures that
+    # projection. Its count fills the checkpoint on the way — the
+    # tokenize runs in that job instead of the query's first stage.
+    verify_m = measure(arrs.select("id", "harr", "n"))
+    arrs_m = upstream(verify_m, arrs)
 
     grams = arrs.select("id", "n", F.explode("arr").alias("gram"))
     dfreq = grams.groupBy("gram").agg(F.count("*").alias("df"))
 
     ranked = grams.join(
-        _sized(dfreq, prof.d, _SSJ_BROADCAST_MAX_D_VOCAB), "gram"
+        _sized(dfreq, arrs_m, "ssjoin.gram_df"), "gram"
     ).withColumn(
         "rnk",
         F.row_number().over(
@@ -228,7 +224,7 @@ def jaccard_similarity_join(
     # prefix table scales with corpus grams, and the static planner
     # broadcast one full copy of it at 377 k docs off the checkpoint's
     # frozen estimate
-    pref = _sized(pref, prof.d, _SSJ_BROADCAST_MAX_D_VOCAB)
+    pref = _sized(pref, arrs_m, "ssjoin.prefix")
     a = pref.alias("a")
     b = pref.alias("b")
     nsum = F.col("a.n") + F.col("b.n")
@@ -264,21 +260,8 @@ def jaccard_similarity_join(
     # repartition, because the array payloads make any additional
     # exchange the dominant cost (measured: a post-join pair
     # repartition was pure overhead).
-    # verify array attaches: measured gate (broadcast to ~0.5 GB of
-    # gram-hash arrays — the sf10u-winning plan — merge beyond)
-    va = _sized(
-        arrs.select(
-            F.col("id").alias("id_a"), F.col("harr").alias("h_a"), F.col("n").alias("n_a")
-        ),
-        prof.d,
-        _BROADCAST_MAX_ROWS_ARRAY,
-    )
-    vb = _sized(
-        arrs.select(
-            F.col("id").alias("id_b"), F.col("harr").alias("h_b"), F.col("n").alias("n_b")
-        ),
-        prof.d,
-        _BROADCAST_MAX_ROWS_ARRAY,
+    va, vb = _sized_pair(
+        arrs, {"id": "id_{}", "harr": "h_{}", "n": "n_{}"}, verify_m, "ssjoin.verify"
     )
     paired = (
         cand.select(F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b"))
@@ -327,50 +310,21 @@ def jaccard_similarity_join(
     # expand representative pairs to member pairs (disjoint clusters:
     # least/greatest restores doc_a < doc_b; cross and intra sets
     # cannot overlap)
-    # expansion-join strategy gated on the measured counts (rep_th is
-    # d rows, members n rows; both checkpoint/agg-descended)
+    # expansion-join strategy gated on the members profile's bytes
+    # (rep_th is d <= n rows of the same columns, members n rows; both
+    # checkpoint/agg-descended)
     rep_th = reps.select(F.col("id").alias("rid"), "__th")
+    th_a, th_b = _sized_pair(
+        rep_th, {"rid": "doc_{}", "__th": "__th_{}"}, prof, "ssjoin.rep_th"
+    )
+    mem_a, mem_b = _sized_pair(
+        members, {"__th": "__th_{}", "id": "{}_id"}, prof, "ssjoin.members"
+    )
     cross = (
-        rep_pairs.join(
-            _sized(
-                rep_th.select(
-                    F.col("rid").alias("doc_a"), F.col("__th").alias("__th_a")
-                ),
-                prof.d,
-                _BROADCAST_MAX_ROWS_META,
-            ),
-            "doc_a",
-        )
-        .join(
-            _sized(
-                rep_th.select(
-                    F.col("rid").alias("doc_b"), F.col("__th").alias("__th_b")
-                ),
-                prof.d,
-                _BROADCAST_MAX_ROWS_META,
-            ),
-            "doc_b",
-        )
-        .join(
-            _sized(
-                members.select(
-                    F.col("__th").alias("__th_a"), F.col("id").alias("a_id")
-                ),
-                prof.n,
-                _BROADCAST_MAX_ROWS_META,
-            ),
-            "__th_a",
-        )
-        .join(
-            _sized(
-                members.select(
-                    F.col("__th").alias("__th_b"), F.col("id").alias("b_id")
-                ),
-                prof.n,
-                _BROADCAST_MAX_ROWS_META,
-            ),
-            "__th_b",
-        )
+        rep_pairs.join(th_a, "doc_a")
+        .join(th_b, "doc_b")
+        .join(mem_a, "__th_a")
+        .join(mem_b, "__th_b")
         .select(
             F.least("a_id", "b_id").alias("doc_a"),
             F.greatest("a_id", "b_id").alias("doc_b"),
@@ -385,14 +339,14 @@ def jaccard_similarity_join(
         arrs.filter(F.col("n") > 0)
         .select("id", "n")
         .join(
-            _sized(rep_th, prof.d, _BROADCAST_MAX_ROWS_META),
+            _sized(rep_th, prof, "ssjoin.grammed_rep_th"),
             F.col("id") == F.col("rid"),
             "inner",
         )
         .select("__th", "n")
     )
     mm = members.join(
-        _sized(grammed_th, prof.d, _BROADCAST_MAX_ROWS_META), "__th"
+        _sized(grammed_th, prof, "ssjoin.grammed_th"), "__th"
     )
     intra = (
         mm.alias("x")

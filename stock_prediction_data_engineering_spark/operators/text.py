@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .measure import dup_material, measure
+
 # ---------------------------------------------------------------------------
 # Adaptive exact-duplicate collapse for text-pure scorers
 
@@ -52,7 +54,7 @@ def collapse_text_scores(
     scoring — where compute-per-distinct-text is the real budget."""
     spark = docs.sparkSession
     par = spark.sparkContext.defaultParallelism
-    hashed = (
+    prof = measure(
         docs.select(id_col, text_col)
         .repartition(par, id_col)
         # NULL-safe content key: md5(NULL) is NULL and every equi-join
@@ -63,15 +65,13 @@ def collapse_text_scores(
         .withColumn(
             "__th",
             F.md5(F.coalesce(F.col(text_col).cast("string"), F.lit("\x00__null__"))),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        distinct="__th",
     )
-    prof = hashed.agg(
-        F.count("*").alias("n"), F.countDistinct("__th").alias("d")
-    ).first()
+    hashed = prof.df
     # same engagement threshold as the ssjoin/dedup collapse: the
     # join-back pays only when clusters materially shrink the compute
-    if prof.d * 100 > prof.n * 95:
+    if not dup_material(prof.rows, prof.distinct):
         return scorer(docs.select(id_col, text_col))
     reps = hashed.groupBy("__th").agg(
         F.min(id_col).alias("__rep_id"),

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..functions import dual_sql as D
+from ..operators.measure import _sized, dup_material, measure
 from ..registry import query
 
 # word 3-gram list, distinct per document, as a SQL expression over a
@@ -185,13 +186,12 @@ def contamination_pairs(docs: DataFrame) -> DataFrame:
     words = docs.select(
         F.col("doc_id"), F.split("text", " ").alias("words")
     )
-    members = docs.select(
-        "doc_id", F.md5(F.col("text").cast("string")).alias("__th")
-    ).localCheckpoint(eager=False)
-    prof = members.agg(
-        F.count("*").alias("n"), F.countDistinct("__th").alias("d")
-    ).first()
-    if prof.d * 100 > prof.n * 95:  # dup mass immaterial: direct path
+    prof = measure(
+        docs.select("doc_id", F.md5(F.col("text").cast("string")).alias("__th")),
+        distinct="__th",
+    )
+    members = prof.df
+    if not dup_material(prof.rows, prof.distinct):  # direct path
         grams = words.select(
             "doc_id",
             F.explode(F.array_distinct(F.expr(_TRIGRAMS))).alias("g"),
@@ -295,19 +295,17 @@ def contamination_screen(docs: DataFrame) -> DataFrame:
     words = docs.select(
         F.col("doc_id"), F.split("text", " ").alias("words")
     )
-    members = docs.select(
-        "doc_id", F.md5(F.col("text").cast("string")).alias("__th")
-    ).localCheckpoint(eager=False)
     # measured join gate (round-11 estimate-blind-broadcast audit):
     # the member/rep-side joins below descend from this checkpoint and
     # the planner static-broadcast them at every measured scale off
-    # its frozen estimate (train_m is member-scaled — unbounded). One
-    # count over the checkpoint (materialized by the query anyway)
-    # keys broadcast-vs-merge; today's winning broadcasts are kept
-    # wherever the measured count proves they fit.
-    from ..operators.dedup import _BROADCAST_MAX_ROWS_META, _sized
-
-    n_members = members.count()
+    # its frozen estimate (train_m is member-scaled — unbounded). Its
+    # measurement (materialized by the query anyway) keys
+    # broadcast-vs-merge; every gated side (n_g included: one row per
+    # distinct text) has at most its rows and no wider columns.
+    members_m = measure(
+        docs.select("doc_id", F.md5(F.col("text").cast("string")).alias("__th"))
+    )
+    members = members_m.df
     reps = members.groupBy("__th").agg(F.min("doc_id").alias("rid"))
     rep_grams = (
         words.join(reps, F.col("doc_id") == F.col("rid"), "inner")
@@ -330,15 +328,15 @@ def contamination_screen(docs: DataFrame) -> DataFrame:
     t_grams = rep_grams.join(
         _sized(
             train_m.select("__th").distinct(),
-            n_members,
-            _BROADCAST_MAX_ROWS_META,
+            members_m,
+            "contamination.train_clusters",
         ),
         "__th",
         "left_semi",
     )
     b_grams = rep_grams.join(
         _sized(
-            bench_sizes.select("__th"), n_members, _BROADCAST_MAX_ROWS_META
+            bench_sizes.select("__th"), members_m, "contamination.bench_clusters"
         ),
         "__th",
         "left_semi",
@@ -358,8 +356,8 @@ def contamination_screen(docs: DataFrame) -> DataFrame:
                 bench_sizes.select(
                     F.col("__th").alias("__th_b"), "bench_members"
                 ),
-                n_members,
-                _BROADCAST_MAX_ROWS_META,
+                members_m,
+                "contamination.bench_sizes",
             ),
             "__th_b",
         )
@@ -371,13 +369,13 @@ def contamination_screen(docs: DataFrame) -> DataFrame:
         .join(
             _sized(
                 n_g.select(F.col("__th").alias("__th_t"), "n_g"),
-                n_members,
-                _BROADCAST_MAX_ROWS_META,
+                members_m,
+                "contamination.gram_counts",
             ),
             "__th_t",
         )
     )
-    return _sized(train_m, n_members, _BROADCAST_MAX_ROWS_META).join(
+    return _sized(train_m, members_m, "contamination.train_members").join(
         per_cluster, F.col("__th") == F.col("__th_t")
     ).select(
         F.col("doc_id").alias("train_doc_id"),
@@ -917,17 +915,16 @@ def boilerplate_profile(docs: DataFrame) -> DataFrame:
     n_parts = int(
         docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
-    members = docs.select(
-        "doc_id", F.md5(F.col("text").cast("string")).alias("__th")
-    ).localCheckpoint(eager=False)
-    prof = members.agg(
-        F.count("*").alias("n"), F.countDistinct("__th").alias("d")
-    ).first()
+    prof = measure(
+        docs.select("doc_id", F.md5(F.col("text").cast("string")).alias("__th")),
+        distinct="__th",
+    )
+    members = prof.df
     boiler = F.sum(F.when(F.col("docs") >= 10, 1).otherwise(0))
     bp = F.expr(
         "sum(CASE WHEN docs >= 10 THEN 1 ELSE 0 END) * 10000 div count(*)"
     )
-    if prof.d * 100 > prof.n * 95:  # dup mass immaterial: direct path
+    if not dup_material(prof.rows, prof.distinct):  # direct path
         from ..operators.ssjoin import split_words, word_ngrams_over
 
         # barrier between split and the gram lambda: an inline split
@@ -1268,12 +1265,11 @@ def q_containment_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver.
     par = spark.sparkContext.defaultParallelism
     src = table(spark, sf_dir, "documents").repartition(par, "doc_id")
-    members = src.select(
-        "doc_id", F.md5(F.col("text").cast("string")).alias("__th")
-    ).localCheckpoint(eager=False)
-    prof = members.agg(
-        F.count("*").alias("n"), F.countDistinct("__th").alias("d")
-    ).first()
+    prof = measure(
+        src.select("doc_id", F.md5(F.col("text").cast("string")).alias("__th")),
+        distinct="__th",
+    )
+    members = prof.df
     out_cols = lambda df: df.filter(  # noqa: E731
         F.col("n_shared") * 10 >= F.col("n_grams")
     ).select(
@@ -1285,7 +1281,7 @@ def q_containment_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("containment_bp"),
     )
-    if prof.d * 100 > prof.n * 95:  # dup mass immaterial: direct path
+    if not dup_material(prof.rows, prof.distinct):  # direct path
         grams = src.select(
             "doc_id", F.split("text", " ").alias("words")
         ).select(

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..functions import dual_sql as D
+from ..operators.measure import dup_material, measure
 from ..registry import query
 
 # whitespace token count as an integer column (the corpus tokenizer
@@ -446,15 +447,16 @@ def leakage_profile(docs: DataFrame) -> DataFrame:
     split = (
         F.when(bucket < "cc", "train").when(bucket < "e6", "val").otherwise("test")
     )
-    members = docs.select(
-        "doc_id",
-        F.md5(F.col("text").cast("string")).alias("__th"),
-        split.alias("split"),
-    ).localCheckpoint(eager=False)
-    prof = members.agg(
-        F.count("*").alias("n"), F.countDistinct("__th").alias("d")
-    ).first()
-    if prof.d * 100 > prof.n * 95:  # dup mass immaterial: direct path
+    prof = measure(
+        docs.select(
+            "doc_id",
+            F.md5(F.col("text").cast("string")).alias("__th"),
+            split.alias("split"),
+        ),
+        distinct="__th",
+    )
+    members = prof.df
+    if not dup_material(prof.rows, prof.distinct):  # direct path
         grams = docs.select(
             "doc_id",
             split.alias("split"),

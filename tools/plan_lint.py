@@ -23,9 +23,12 @@ Checks per plan (rendered optimized plan text):
   Deliberate, measured broadcasts are exempted by detecting the
   explicit broadcast hint in the optimized logical plan: a query
   whose every suspicious BroadcastExchange is matched by an explicit
-  hint (e.g. operators/dedup.py _sized, which broadcasts only below
-  a measured row budget) passes; unhinted suspicious broadcasts
-  flag.
+  hint (e.g. operators/measure.py _sized, which broadcasts only while
+  the measured bytes of the side's checkpoint fit the byte budget)
+  passes; unhinted suspicious broadcasts flag. The JSON output
+  carries each query's (suspicious, hinted) counts under
+  ``broadcasts``, so a count that grows shows between runs even where
+  the hints still cover it.
 
 Single-partition windows are already pinned per-query in
 tests/test_plan_shapes.py; this tool focuses on line-level expression
@@ -184,6 +187,7 @@ def main() -> None:
     registry.load_all()
     spark = get_spark(app_name="plan-lint")
     results: dict[str, list[str]] = {}
+    broadcasts: dict[str, list[int]] = {}
     errors: dict[str, str] = {}
     for name, fn in sorted(registry.QUERIES.items()):
         try:
@@ -202,6 +206,8 @@ def main() -> None:
             phys = qe.executedPlan().toString()
             s = suspicious_broadcasts(phys)
             h = plan.count("strategy=broadcast")
+            if s or h:
+                broadcasts[name] = [s, h]
             if s > h:
                 finds.append(f"estimate-blind-broadcast:{s}>{h}")
             finds = [
@@ -219,6 +225,8 @@ def main() -> None:
         "n_queries": len(registry.QUERIES),
         "n_flagged": len(results),
         "flagged": results,
+        # per query with any: [suspicious BroadcastExchanges, hints]
+        "broadcasts": broadcasts,
         "n_errors": len(errors),
         "errors": errors,
     }
