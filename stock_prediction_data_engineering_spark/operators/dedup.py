@@ -897,22 +897,23 @@ def _index_params(
     }
 
 
-def _check_index_meta(path: str, op: str, expected: dict) -> None:
-    """Fail fast when a persisted index does not match the reader's
-    shingle/band/hash parameters or band-hash format. Without this, a
-    parameter or format drift does not error — band hashes simply
-    never collide and the probe returns ZERO matches, which an
-    admission loop would read as "no duplicates, admit everything".
-    An index with data but no ``_meta.json`` predates the metadata
-    contract (i.e. an unknown band-hash format) and is rejected for
-    the same reason."""
+def _check_index_meta(path: str, op: str, expected: dict, writer: str) -> None:
+    """Fail fast when a persisted index (MinHash or winnowing) does not
+    match the reader's parameters or format. Without this, a drift
+    does not error — hashes or k-grams simply never collide, or the
+    probe prunes to the wrong buckets, and it returns ZERO or only
+    some matches, which an admission loop would read as "no
+    duplicates, admit everything". An index with data but no
+    ``_meta.json`` predates the metadata contract (i.e. unknown
+    parameters) and is rejected for the same reason. ``writer`` names
+    the function that rebuilds the index."""
     meta_path = _index_meta_path(path)
     if not os.path.exists(meta_path):
         raise ValueError(
             f"{op}: no _meta.json under {path!r} — this index predates "
-            "the metadata contract, so its band-hash format is unknown "
-            "and probing it would silently return zero matches. Rebuild "
-            "it with minhash_index_write(mode='overwrite')."
+            "the metadata contract, so its parameters are unknown and "
+            "probing it could silently return no matches. Rebuild it "
+            f"with {writer}(mode='overwrite')."
         )
     with open(meta_path) as fh:
         meta = json.load(fh)
@@ -929,11 +930,21 @@ def _check_index_meta(path: str, op: str, expected: dict) -> None:
         raise ValueError(
             f"{op}: parameter/format mismatch against the persisted "
             f"index at {path!r} ({detail}). Probing or appending with "
-            "mismatched parameters silently yields zero band matches "
-            "or a mixed-format index; rebuild with "
-            "minhash_index_write(mode='overwrite') or pass the index's "
-            "own parameters."
+            "mismatched parameters silently yields missing matches or "
+            f"a mixed-format index; rebuild with {writer}(mode='overwrite') "
+            "or pass the index's own parameters."
         )
+
+
+def _write_index_meta(path: str, params: dict) -> None:
+    """Commit an index's ``_meta.json`` — LAST, after its tables: a
+    crashed overwrite leaves no (or a stale) meta for partially-written
+    tables, and the reader's check rejects rather than silently probing
+    a half-built index. Local json like sources/snapshots.py
+    manifests; an object-store deployment would route this through the
+    Hadoop FileSystem API (sources/lake.py note)."""
+    with open(_index_meta_path(path), "w") as fh:
+        json.dump(params, fh)
 
 
 def minhash_index_write(
@@ -988,7 +999,9 @@ def minhash_index_write(
         # appending to an existing index: validate BEFORE writing a
         # single row, so a mismatch can never mix two band-hash
         # formats (or two shingle grains) in one index
-        _check_index_meta(path, "minhash_index_write(mode='append')", params)
+        _check_index_meta(
+            path, "minhash_index_write(mode='append')", params, "minhash_index_write"
+        )
     members = docs.select(
         F.col(id_col).alias("id"),
         F.md5(F.col(text_col).cast("string")).alias("th"),
@@ -1010,14 +1023,7 @@ def minhash_index_write(
         f"{path}/hashes"
     )
     members.write.mode(mode).parquet(f"{path}/members")
-    # meta commits last: a crashed overwrite leaves no (or a stale)
-    # meta for partially-written tables, and the reader's check
-    # rejects rather than silently probing a half-built index. Local
-    # json like sources/snapshots.py manifests; an object-store
-    # deployment would route this through the Hadoop FileSystem API
-    # (sources/lake.py note).
-    with open(_index_meta_path(path), "w") as fh:
-        json.dump(params, fh)
+    _write_index_meta(path, params)
 
 
 def minhash_index_probe(
@@ -1059,6 +1065,7 @@ def minhash_index_probe(
         path,
         "minhash_index_probe",
         _index_params(k, num_hashes, bands, n_buckets),
+        "minhash_index_write",
     )
     spark = new_docs.sparkSession
     new_members = new_docs.select(

@@ -1,5 +1,6 @@
 """Product-quantization ANN — the third L7 scale path (SURVEY.md
-§2.11), after hyperplane LSH and IVF-Flat (operators/similarity.py).
+§2.11), after hyperplane LSH and IVF-Flat (operators/similarity.py),
+and the home of the quantized-search steps all four indexes share.
 
 Why PQ at 100 TB: LSH and IVF prune *which* vectors are scanned, but
 every scanned row still reads the full float vector (256 B at 64-dim
@@ -10,7 +11,10 @@ table lookups per row — a 100 TB embedding corpus becomes a ~3 TB
 code lake, and the scan cost is memory-bandwidth on codes, not FLOPs
 on floats. This is the standard quantized-search design (Jégou,
 Douze & Schmid, "Product Quantization for Nearest Neighbor Search",
-IEEE TPAMI 2011).
+IEEE TPAMI 2011): an optional coarse partitioner (IVF cells or LSH
+buckets, operators/similarity.py), optional (residual) PQ codes, ADC
+scoring and an exact re-rank. Each step has one implementation here
+or in operators/similarity.py; the searches only compose them.
 
 Shape of the implementation, Spark-first:
 
@@ -34,7 +38,8 @@ Shape of the implementation, Spark-first:
 
 Vectors are L2-normalized before both fit and encode, so the ADC
 inner product approximates cosine directly (same geometry trick as
-IVF's spherical k-means, operators/similarity.py:97).
+IVF's spherical k-means, ``l2_normalize_expr`` in
+operators/similarity.py).
 
 Reference scope: the reference repo (a 131-line pandas ingest DAG)
 has no vector search; this module is north-star surface per
@@ -43,12 +48,25 @@ BASELINE.json's LLM-pipeline brief.
 
 from __future__ import annotations
 
-import pandas as pd
+import dataclasses
+from typing import ClassVar
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .similarity import cosine_expr
+from .similarity import (
+    _coarse_fit,
+    _cosine_topk,
+    _persist_partitioned,
+    _read_query,
+    _sidecar_load,
+    _sidecar_write,
+    ivf_assign,
+    ivf_probe,
+    staged_append,
+)
 
 
 def _fit_codebooks_matrix(X, m: int, nbits: int, seed: int, n_iter: int = 10):
@@ -56,8 +74,6 @@ def _fit_codebooks_matrix(X, m: int, nbits: int, seed: int, n_iter: int = 10):
     ``X`` (n, dim). Returns ``(m, k, dim // m)`` with k clamped to the
     sample size; empty clusters keep their previous center (standard
     Lloyd fallback)."""
-    import numpy as np
-
     n, dim = X.shape
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
@@ -108,8 +124,6 @@ def _sample_matrix(
     row inside the TakeOrdered scan; measured 10.7 s vs ~1 s for a
     20k-row corpus at sf1, and it grows with the corpus while the
     numpy normalize stays O(sample)."""
-    import numpy as np
-
     rows = (
         corpus.select(F.col(vec_col).alias("v"), *extra_cols)
         .orderBy(F.xxhash64(F.col("v")))
@@ -146,21 +160,29 @@ def pq_encode_df(
     codebooks,
     vec_col: str = "embedding",
     code_col: str = "codes",
+    centroids=None,
 ) -> DataFrame:
     """Add the PQ code array (``array<smallint>``, length m) to every
     corpus row. Arrow-batched: one numpy argmin per subspace per
-    batch; the ~64 KB codebook rides in the task closure."""
-    import numpy as np
+    batch; the ~64 KB codebook rides in the task closure.
 
+    With ``centroids`` (IVF-PQ), each row's unit vector is encoded as
+    its RESIDUAL against ``centroids[ivf_cell]`` (the row must carry
+    ``ivf_cell``). The build and every append call this one encoder,
+    so appended batches encode bit-identically against the frozen
+    quantizers."""
     cb = np.asarray(codebooks)
     m, _, dsub = cb.shape
     cb_norms = (cb**2).sum(axis=2)  # (m, k), precomputed once
+    cents = None if centroids is None else np.asarray(centroids)
 
     @F.pandas_udf("array<smallint>")
-    def _encode(vs: pd.Series) -> pd.Series:
+    def _encode(vs: pd.Series, *cell: pd.Series) -> pd.Series:
         X = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
         norms = np.sqrt((X**2).sum(axis=1, keepdims=True))
         np.divide(X, norms, out=X, where=norms > 0)
+        if cell:  # IVF-PQ: the residual against the row's cell centroid
+            X = X - cents[cell[0].to_numpy(dtype=int)]
         B = X.shape[0]
         Xs = X.reshape(B, m, dsub)
         codes = np.empty((B, m), dtype=np.int16)
@@ -169,9 +191,11 @@ def pq_encode_df(
             codes[:, sub] = d2.argmin(axis=1)
         return pd.Series(list(codes))
 
-    return corpus.withColumn(code_col, _encode(F.col(vec_col)))
+    args = [F.col(vec_col)] + ([] if cents is None else [F.col("ivf_cell")])
+    return corpus.withColumn(code_col, _encode(*args))
 
 
+@dataclasses.dataclass(eq=False)
 class PqIndex:
     """A built PQ index: the compressed (id, codes) table + the tiny
     codebook matrix. Build once, search many times. When ``path`` was
@@ -179,10 +203,10 @@ class PqIndex:
     lake — at scale this is the ~32×-smaller artifact every query
     scans instead of the raw embedding lake."""
 
-    def __init__(self, table: DataFrame, codebooks, id_col: str):
-        self.table = table
-        self.codebooks = codebooks
-        self.id_col = id_col
+    table: DataFrame
+    codebooks: np.ndarray
+    vec_col: str
+    id_col: str
 
     @property
     def m(self) -> int:
@@ -213,26 +237,7 @@ def pq_build(
     if path is not None:
         encoded.write.mode("overwrite").parquet(path)
         encoded = corpus.sparkSession.read.parquet(path)
-    return PqIndex(encoded, codebooks, id_col)
-
-
-def _lut_row(spark: SparkSession, codebooks, qvec) -> DataFrame:
-    """The query's asymmetric-distance lookup table as a 1-row
-    DataFrame: lut[sub·k + j] = <q_sub, codebook[sub][j]>. Computed
-    driver-side (m × k × dsub ≈ 16k FLOPs) and broadcast."""
-    import numpy as np
-
-    cb = np.asarray(codebooks)
-    m, k, dsub = cb.shape
-    q = np.asarray(qvec, dtype=np.float64)
-    qn = np.linalg.norm(q)
-    if qn > 0:
-        q = q / qn
-    qs = q.reshape(m, dsub)
-    lut = np.einsum("sd,skd->sk", qs, cb).reshape(m * k)
-    return spark.createDataFrame(
-        [(lut.tolist(),)], "lut array<double>"
-    )
+    return PqIndex(encoded, codebooks, vec_col, id_col)
 
 
 def adc_score_expr(codes, lut, k: int):
@@ -255,73 +260,117 @@ ISIN_PUSHDOWN_MAX = 8192
 this many ids, a driver-collected In-list pushed into the parquet scan
 (row-group min/max pruning) beats a join; past it, the In-literal
 bloats the plan and collection is no longer 'bounded metadata', so the
-rerank switches to a lazy broadcast semi-join on the shortlist
-DataFrame instead (the brute-force-equivalence tests pass corpus-sized
+rerank switches to a lazy semi-join on the shortlist DataFrame
+instead (the brute-force-equivalence tests pass corpus-sized
 shortlists through exactly that path)."""
 
 
+def _adc_topk(
+    cands: DataFrame,
+    q,
+    index,
+    query_vec: DataFrame,
+    k: int,
+    shortlist: int | None = None,
+    rerank_from: DataFrame | None = None,
+    centroids=None,
+) -> DataFrame:
+    """The one ADC stage of every quantized search: score ``cands``
+    (rows carrying ``codes``, already pruned to the probed cells or
+    buckets) against the unit query ``q`` and keep the top n by
+    ``(adc_score desc, id)``, ``adc_score`` rounded to 4 places.
+
+    The lookup table lut[sub·k + j] = <q_sub, codebook[sub][j]> is
+    computed driver-side (m × k × dsub ≈ 16k FLOPs) and broadcast as
+    one row. With ``centroids`` the codes are IVF residuals and the
+    score adds the per-cell constant q·c_cell (``cell_lut``, looked up
+    by ``ivf_cell``): q·x ≈ q·c_cell + q·residual_code, so residual
+    codes cost one extra lookup per row, all JVM.
+
+    Without ``rerank_from``, n = k and the ADC top-k is the answer.
+    With it, n = ``shortlist`` (default 10·k) and :func:`_exact_rerank`
+    re-scores those candidates with true cosine from ``rerank_from``
+    (an (id, vector) table); the output column is then ``cosine``
+    instead of ``adc_score``."""
+    cb = np.asarray(index.codebooks)
+    m, kk, dsub = cb.shape
+    lut = np.einsum("sd,skd->sk", q.reshape(m, dsub), cb).reshape(m * kk)
+    score = adc_score_expr(F.col("codes"), F.col("lut"), kk)
+    lut_row, schema = [lut.tolist()], "lut array<double>"
+    if centroids is not None:
+        lut_row.append((np.asarray(centroids) @ q).tolist())
+        schema += ", cell_lut array<double>"
+        score = (
+            F.element_at(F.col("cell_lut"), (F.col("ivf_cell") + 1).cast("int"))
+            + score
+        )
+    lut_df = cands.sparkSession.createDataFrame([tuple(lut_row)], schema)
+    n = k if rerank_from is None else (shortlist or 10 * k)
+    top = (
+        cands.crossJoin(F.broadcast(lut_df))
+        .select(F.col(index.id_col), F.round(score, 4).alias("adc_score"))
+        .orderBy(F.col("adc_score").desc(), F.col(index.id_col))
+        .limit(n)
+    )
+    if rerank_from is None:
+        return top
+    return _exact_rerank(
+        top, n, rerank_from, query_vec, k, index.vec_col, index.id_col
+    )
+
+
 def _exact_rerank(
-    shortlist_df: DataFrame,
+    adc_top: DataFrame,
+    shortlist: int,
     rerank_from: DataFrame,
     query_vec: DataFrame,
     k: int,
     vec_col: str,
     id_col: str,
-    isin_pushdown: bool = True,
 ) -> DataFrame:
-    """Exact-cosine re-rank of an ADC shortlist — the standard second
-    stage of quantized search (Jégou et al. 2011 §V.C: ADC orders
-    candidates with quantization distortion; re-scoring the short
-    shortlist with TRUE distances recovers the exact ordering among
-    them, so recall@k is limited only by shortlist membership, not by
-    code precision).
+    """Exact-cosine re-rank of an ADC shortlist of ``shortlist`` rows —
+    the standard second stage of quantized search (Jégou et al. 2011
+    §V.C: ADC orders candidates with quantization distortion;
+    re-scoring the short shortlist with TRUE distances recovers the
+    exact ordering among them, so recall@k is limited only by
+    shortlist membership, not by code precision). The float read is
+    |shortlist| rows, so a search can probe wide over code bytes while
+    total bytes stay ≈ (probed rows)·m + |shortlist|·dim·4.
 
-    Scale shape, small shortlists (``isin_pushdown=True``): the
-    shortlist is O(k·factor) rows — bounded metadata, so collecting
-    its ids to the driver is the same driver-bounded pattern as the
-    ranker offset maps. The ids go back as an ``isin`` predicate on
-    the ORIGINAL vector table, which Spark pushes into the parquet
-    scan (row-group min/max pruning on the id column); the re-rank
-    therefore reads full float vectors for only the shortlist rows,
-    never a second corpus pass. At 100 TB the total read is (codes of
-    scanned cells)/compression + |shortlist| vectors. NOTE this path
-    is EAGER: the collect runs two Spark jobs (ADC TakeOrdered +
-    fetch) at DataFrame-CONSTRUCTION time, before any action on the
-    returned frame — callers building plans without executing them
-    (plan sweeps, lints) pay that cost up front.
+    Execution semantics, chosen here from the shortlist size:
 
-    Large shortlists (``isin_pushdown=False``): no collect, no
-    In-literal — a lazy semi-join of the vector table against the
-    shortlist ids, with NO broadcast hint: this path is chosen
-    precisely because the shortlist outgrew the bounded-metadata
-    threshold, so its size is unknown and possibly corpus-scale, and
-    a mandated broadcast of an unbounded id set risks driver/executor
-    OOM. AQE's runtime join selection broadcasts it anyway whenever
-    the built side turns out small, and falls back to a shuffled
-    semi-join when it doesn't — exactly the adaptive behavior a hint
-    would override. Loses scan-level pruning (the shortlist is no
-    longer 'a few row groups' anyway) but keeps the plan size and
-    driver memory O(1) in shortlist length."""
-    qrow = query_vec.select(F.col(vec_col).alias("qvec")).limit(1)
-    cos = F.round(cosine_expr(F.col(vec_col), F.col("qvec")), 4)
-    if isin_pushdown:
-        ids = [r[0] for r in shortlist_df.select(id_col).collect()]
+    - Up to ``ISIN_PUSHDOWN_MAX`` rows, the shortlist is bounded
+      metadata, so its ids are collected to the driver (the same
+      driver-bounded pattern as the ranker offset maps) and go back as
+      an ``isin`` predicate on ``rerank_from``, which Spark pushes into
+      the parquet scan (row-group min/max pruning on the id column);
+      the re-rank reads full float vectors for only the shortlist
+      rows, never a second corpus pass. This path is EAGER: the
+      collect runs the ADC TakeOrdered job at DataFrame-CONSTRUCTION
+      time, before any action on the returned frame — callers building
+      plans without executing them (plan sweeps, lints) pay that cost
+      up front.
+    - Larger shortlists stay fully lazy: a semi-join of ``rerank_from``
+      against the shortlist ids, with NO broadcast hint. The shortlist
+      outgrew the bounded-metadata threshold, so its size is unknown
+      and possibly corpus-scale, and a mandated broadcast risks
+      driver/executor OOM. AQE's runtime join selection broadcasts it
+      anyway whenever the built side turns out small, and falls back
+      to a shuffled semi-join when it doesn't. Loses scan-level
+      pruning but keeps the plan size and driver memory O(1) in
+      shortlist length."""
+    if shortlist <= ISIN_PUSHDOWN_MAX:
+        ids = [r[0] for r in adc_top.select(id_col).collect()]
         cand = rerank_from.filter(F.col(id_col).isin(ids))
     else:
-        cand = rerank_from.join(shortlist_df.select(id_col), id_col, "semi")
-    return (
-        cand.crossJoin(F.broadcast(qrow))
-        .select(F.col(id_col), cos.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
+        cand = rerank_from.join(adc_top.select(id_col), id_col, "semi")
+    return _cosine_topk(cand, query_vec, k, vec_col, id_col)
 
 
 def pq_search(
     index: PqIndex,
     query_vec: DataFrame,
     k: int = 10,
-    vec_col: str = "embedding",
     rerank_from: DataFrame | None = None,
     shortlist: int | None = None,
 ) -> DataFrame:
@@ -334,46 +383,13 @@ def pq_search(
     the per-subspace k-means error, measured by the recall harness
     (tools/ann_recall.py).
 
-    With ``rerank_from`` (the original (id, vector) table), a second
-    exact stage runs: ADC picks a ``shortlist`` (default 10·k) of
-    candidates, then :func:`_exact_rerank` re-scores ONLY those rows
-    with true cosine and returns the top k — recall@k then depends
-    only on the shortlist containing the true neighbors, not on code
-    precision (measured on sf0.1: 0.62 → ≥0.9 recall@10 at <10%
-    byte-equivalent scan). Output column is ``cosine`` (exact) instead
-    of ``adc_score`` (approximate).
-
-    Execution semantics with ``rerank_from``: shortlists up to
-    ``ISIN_PUSHDOWN_MAX`` collect EAGERLY at construction time (Spark
-    jobs run before any action on the returned frame) to build a
-    scan-pushed In predicate; larger shortlists stay fully lazy via a
-    broadcast semi-join — see :func:`_exact_rerank`."""
-    qrow = query_vec.select(vec_col).first()
-    if qrow is None:
-        raise ValueError("query_vec is empty: no row to search for")
-    lut_df = _lut_row(index.table.sparkSession, index.codebooks, qrow[0])
-    score = adc_score_expr(F.col("codes"), F.col("lut"), index.k)
-    n_take = k if rerank_from is None else (shortlist or 10 * k)
-    adc_top = (
-        index.table.crossJoin(F.broadcast(lut_df))
-        .select(
-            F.col(index.id_col),
-            F.round(score, 4).alias("adc_score"),
-        )
-        .orderBy(F.col("adc_score").desc(), F.col(index.id_col))
-        .limit(n_take)
-    )
-    if rerank_from is None:
-        return adc_top
-    return _exact_rerank(
-        adc_top,
-        rerank_from,
-        query_vec,
-        k,
-        vec_col,
-        index.id_col,
-        isin_pushdown=n_take <= ISIN_PUSHDOWN_MAX,
-    )
+    With ``rerank_from`` (the original (id, vector) table), ADC picks
+    a ``shortlist`` (default 10·k) and the exact stage re-scores only
+    those rows (measured on sf0.1: 0.62 → ≥0.9 recall@10 at <10%
+    byte-equivalent scan) — see :func:`_adc_topk` and
+    :func:`_exact_rerank` for the output and execution semantics."""
+    q, _ = _read_query(query_vec, index.vec_col)
+    return _adc_topk(index.table, q, index, query_vec, k, shortlist, rerank_from)
 
 
 def pq_topk(
@@ -390,7 +406,7 @@ def pq_topk(
     :func:`pq_search`. Repeated searches should build (and persist)
     the index once and reuse it."""
     index = pq_build(corpus, vec_col, id_col, m=m, nbits=nbits, seed=seed)
-    return pq_search(index, query_vec, k, vec_col)
+    return pq_search(index, query_vec, k)
 
 
 # ---------------------------------------------------------------------------
@@ -402,17 +418,21 @@ def pq_topk(
 # per-cell constant lookup plus the SAME m-term ADC fold — all JVM.
 
 
+@dataclasses.dataclass(eq=False)
 class IvfPqIndex:
     """A built IVF-PQ index: (id, ivf_cell, codes) table + the coarse
     centroid matrix + residual codebooks. When persisted, the code
     lake is partitioned by ``ivf_cell`` so probes prune to the probed
     cells' directories AND read ~32× fewer bytes within them."""
 
-    def __init__(self, table: DataFrame, centroids, codebooks, id_col: str):
-        self.table = table
-        self.centroids = centroids
-        self.codebooks = codebooks
-        self.id_col = id_col
+    table: DataFrame
+    centroids: np.ndarray
+    codebooks: np.ndarray
+    vec_col: str
+    id_col: str
+
+    SIDECAR: ClassVar[str] = "_ivfpq_meta.json"
+    FORMAT: ClassVar[str] = "ivf-pq"
 
     @property
     def m(self) -> int:
@@ -425,41 +445,6 @@ class IvfPqIndex:
     @property
     def n_cells(self) -> int:
         return len(self.centroids)
-
-
-def _ivfpq_encode(
-    assigned: DataFrame, centroids, codebooks, vec_col: str, id_col: str
-) -> DataFrame:
-    """The residual-PQ encode pass: (vector, cell) → m one-byte codes,
-    Arrow-batched, map-only. Shared by the initial build and the
-    append-ingest path so appended batches are encoded bit-identically
-    against the frozen quantizers."""
-    import numpy as np
-
-    cb = np.asarray(codebooks)
-    cents = np.asarray(centroids)
-    m_, _, dsub = cb.shape
-    cb_norms = (cb**2).sum(axis=2)
-
-    @F.pandas_udf("array<smallint>")
-    def _encode(vs: pd.Series, cell_s: pd.Series) -> pd.Series:
-        import numpy as np  # noqa: PLC0415 — worker-side import
-
-        V = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
-        norms = np.sqrt((V**2).sum(axis=1, keepdims=True))
-        np.divide(V, norms, out=V, where=norms > 0)
-        R = V - cents[cell_s.to_numpy(dtype=int)]
-        B = R.shape[0]
-        Rs = R.reshape(B, m_, dsub)
-        codes = np.empty((B, m_), dtype=np.int16)
-        for sub in range(m_):
-            d2 = -2.0 * Rs[:, sub, :] @ cb[sub].T + cb_norms[sub]
-            codes[:, sub] = d2.argmin(axis=1)
-        return pd.Series(list(codes))
-
-    return assigned.select(
-        id_col, "ivf_cell", _encode(F.col(vec_col), F.col("ivf_cell")).alias("codes")
-    )
 
 
 def ivfpq_build(
@@ -476,47 +461,27 @@ def ivfpq_build(
 ) -> IvfPqIndex:
     """Build the composed index.
 
-    1. Coarse quantizer: spherical MLlib KMeans (reused from
-       operators/similarity.py — fit on ``sample_fraction`` at scale).
-    2. Cell assignment: one distributed map-only transform.
-    3. Residual codebooks: per-subspace k-means over
+    1. Coarse quantizer + cell assignment: the IVF fit of
+       operators/similarity.py, bounded to ``sample_limit`` rows.
+    2. Residual codebooks: per-subspace k-means over
        ``x_norm − centroid(cell)`` on the bounded deterministic
        sample (driver-side, O(1) in corpus size).
-    4. Encode: Arrow-batched pandas_udf over (vector, cell) — the
-       only full-corpus pass beyond the assignment, map-only.
+    3. Encode: :func:`pq_encode_df` over (vector, cell) — the only
+       full-corpus pass beyond the assignment, map-only.
     """
-    import numpy as np
-
-    from .similarity import ivf_assign, ivf_fit_centroids
-
-    fit_input = (
-        corpus.sample(fraction=sample_fraction, seed=seed)
-        if sample_fraction is not None
-        else corpus
+    _, centroids, assigned = _coarse_fit(
+        corpus, vec_col, n_cells, seed, sample_fraction, sample_limit
     )
-    # KMeans fit bounded like ivf_build's fit_limit: hash-ordered
-    # top-k keeps the quantizer fit O(sample) at any corpus size
-    fit_input = fit_input.orderBy(F.xxhash64(F.col(vec_col))).limit(sample_limit)
-    model, centroids = ivf_fit_centroids(fit_input, vec_col, n_cells, seed)
-    assigned = ivf_assign(corpus, model, vec_col)
-
     X, rows = _sample_matrix(
         assigned, vec_col, sample_limit, extra_cols=(F.col("ivf_cell"),)
     )
     cells = np.array([r["ivf_cell"] for r in rows], dtype=int)
-    residuals = X - centroids[cells]
-    codebooks = _fit_codebooks_matrix(residuals, m, nbits, seed)
-
-    encoded = _ivfpq_encode(assigned, centroids, codebooks, vec_col, id_col)
-    if path is not None:
-        (
-            encoded.repartition("ivf_cell")
-            .write.mode("overwrite")
-            .partitionBy("ivf_cell")
-            .parquet(path)
-        )
-        encoded = corpus.sparkSession.read.parquet(path)
-    return IvfPqIndex(encoded, centroids, codebooks, id_col)
+    codebooks = _fit_codebooks_matrix(X - centroids[cells], m, nbits, seed)
+    encoded = pq_encode_df(assigned, codebooks, vec_col, centroids=centroids)
+    table = _persist_partitioned(
+        encoded.select(id_col, "ivf_cell", "codes"), path, "ivf_cell"
+    )
+    return IvfPqIndex(table, centroids, codebooks, vec_col, id_col)
 
 
 def ivfpq_search(
@@ -524,7 +489,6 @@ def ivfpq_search(
     query_vec: DataFrame,
     k: int = 10,
     nprobe: int = 4,
-    vec_col: str = "embedding",
     rerank_from: DataFrame | None = None,
     shortlist: int | None = None,
 ) -> DataFrame:
@@ -534,59 +498,12 @@ def ivfpq_search(
     per-row JVM fold (one cell-constant lookup + m code lookups) →
     TakeOrderedAndProject. Scan fraction ~ nprobe/n_cells of the
     corpus at ~32× fewer bytes per scanned row than IVF-Flat.
-
-    With ``rerank_from`` (the original (id, vector) table) a second
-    exact stage re-scores the ADC ``shortlist`` (default 10·k) with
-    true cosine — see :func:`_exact_rerank`; the pruned+compressed
-    scan picks candidates, the exact pass reads |shortlist| full
-    vectors via a pushed-down id predicate. Output column is then
-    ``cosine`` instead of ``adc_score``.
-
-    Execution semantics with ``rerank_from``: same as
-    :func:`pq_search` — shortlists ≤ ``ISIN_PUSHDOWN_MAX`` collect
-    eagerly at construction time for the In-pushdown; larger ones use
-    the lazy broadcast semi-join path."""
-    import numpy as np
-
-    qrow = query_vec.select(vec_col).first()
-    if qrow is None:
-        raise ValueError("query_vec is empty: no row to search for")
-    q = np.asarray(qrow[0], dtype=np.float64)
-    qn = np.linalg.norm(q)
-    if qn > 0:
-        q = q / qn
-    # cell choice: euclidean on the unit sphere == cosine ordering
-    probed = np.argsort(((index.centroids - q) ** 2).sum(axis=1))[:nprobe].tolist()
-
-    m, kk, dsub = index.codebooks.shape
-    lut = np.einsum("sd,skd->sk", q.reshape(m, dsub), index.codebooks).reshape(m * kk)
-    cell_const = index.centroids @ q  # q·c_cell per cell, n_cells doubles
-    spark = index.table.sparkSession
-    lut_df = spark.createDataFrame(
-        [(lut.tolist(), cell_const.tolist())],
-        "lut array<double>, cell_lut array<double>",
-    )
-    score = F.element_at(
-        F.col("cell_lut"), (F.col("ivf_cell") + 1).cast("int")
-    ) + adc_score_expr(F.col("codes"), F.col("lut"), kk)
-    n_take = k if rerank_from is None else (shortlist or 10 * k)
-    adc_top = (
-        index.table.filter(F.col("ivf_cell").isin(probed))
-        .crossJoin(F.broadcast(lut_df))
-        .select(F.col(index.id_col), F.round(score, 4).alias("adc_score"))
-        .orderBy(F.col("adc_score").desc(), F.col(index.id_col))
-        .limit(n_take)
-    )
-    if rerank_from is None:
-        return adc_top
-    return _exact_rerank(
-        adc_top,
-        rerank_from,
-        query_vec,
-        k,
-        vec_col,
-        index.id_col,
-        isin_pushdown=n_take <= ISIN_PUSHDOWN_MAX,
+    ``rerank_from`` and ``shortlist`` add the exact stage as in
+    :func:`pq_search`."""
+    q, cells = ivf_probe(index, query_vec, nprobe)
+    probed = index.table.filter(F.col("ivf_cell").isin(cells))
+    return _adc_topk(
+        probed, q, index, query_vec, k, shortlist, rerank_from, index.centroids
     )
 
 
@@ -608,7 +525,7 @@ def ivfpq_topk(
     index = ivfpq_build(
         corpus, vec_col, id_col, n_cells=n_cells, m=m, nbits=nbits, seed=seed
     )
-    return ivfpq_search(index, query_vec, k, nprobe, vec_col)
+    return ivfpq_search(index, query_vec, k, nprobe)
 
 
 def ivfpq_index_write(
@@ -626,12 +543,10 @@ def ivfpq_index_write(
     """Persist a reloadable, APPENDABLE IVF-PQ index: the
     cell-partitioned code lake plus a ``_ivfpq_meta.json`` sidecar
     carrying the coarse centroids and residual codebooks (both tiny —
-    KBs). Same ingest contract as :func:`ivf_index_write`: append
-    batches encode against the FROZEN quantizers in O(batch); rebuild
-    when distribution drift matters."""
-    import json
-    import os
-
+    KBs). Same ingest contract as
+    :func:`~.similarity.ivf_index_write`: append batches encode against
+    the FROZEN quantizers in O(batch); rebuild when distribution drift
+    matters."""
     index = ivfpq_build(
         corpus,
         vec_col,
@@ -644,43 +559,14 @@ def ivfpq_index_write(
         sample_fraction=sample_fraction,
         path=path,
     )
-    import numpy as np
-
-    with open(os.path.join(path, "_ivfpq_meta.json"), "w") as fh:
-        json.dump(
-            {
-                "format": "ivf-pq",
-                "vec_col": vec_col,
-                "id_col": id_col,
-                "centroids": np.asarray(index.centroids).tolist(),
-                "codebooks": np.asarray(index.codebooks).tolist(),
-            },
-            fh,
-        )
+    _sidecar_write(index, path)
     return index
 
 
 def ivfpq_index_load(spark: SparkSession, path: str) -> IvfPqIndex:
     """Reload a persisted IVF-PQ index: code lake + frozen coarse
-    centroids and residual codebooks. The returned index records the
-    sidecar's ``vec_col`` name so searches and appends keep using the
-    build-time column."""
-    import json
-    import os
-
-    import numpy as np
-
-    with open(os.path.join(path, "_ivfpq_meta.json")) as fh:
-        meta = json.load(fh)
-    table = spark.read.parquet(path)
-    idx = IvfPqIndex(
-        table,
-        np.asarray(meta["centroids"], dtype=float),
-        np.asarray(meta["codebooks"], dtype=float),
-        meta["id_col"],
-    )
-    idx.vec_col = meta["vec_col"]
-    return idx
+    centroids, residual codebooks and build-time column names."""
+    return _sidecar_load(IvfPqIndex, spark, path)
 
 
 def ivfpq_index_append(
@@ -690,16 +576,13 @@ def ivfpq_index_append(
     assign cells against the frozen coarse centroids, encode residuals
     against the frozen codebooks (both one Arrow-batched map —
     O(batch)), append into the existing ``ivf_cell=`` directories via
-    :func:`~..operators.similarity.staged_append`: the batch stages
-    under a hidden prefix and renames in, so a failed append is never
+    :func:`~.similarity.staged_append`: the batch stages under a
+    hidden prefix and renames in, so a failed append is never
     reader-visible and completed codes become searchable with
     unchanged pruning."""
-    from .similarity import ivf_assign, staged_append
-
     index = ivfpq_index_load(spark, path)
-    vec_col = getattr(index, "vec_col", "embedding")
-    assigned = ivf_assign(batch, index.centroids, vec_col)
-    encoded = _ivfpq_encode(
-        assigned, index.centroids, index.codebooks, vec_col, index.id_col
+    assigned = ivf_assign(batch, index.centroids, index.vec_col)
+    encoded = pq_encode_df(
+        assigned, index.codebooks, index.vec_col, centroids=index.centroids
     )
-    staged_append(encoded, path, "ivf_cell")
+    staged_append(encoded.select(index.id_col, "ivf_cell", "codes"), path, "ivf_cell")

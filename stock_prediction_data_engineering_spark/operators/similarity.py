@@ -16,6 +16,12 @@ state) so signatures are reproducible across runs and engines.
 
 from __future__ import annotations
 
+import dataclasses
+import json
+import os
+from typing import ClassVar
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -160,20 +166,12 @@ def cosine_expr(a: Column, b: Column) -> Column:
     return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
-def _plane_component(plane: int, dim: int) -> Column:
-    """Deterministic pseudo-random hyperplane component in [-1, 1):
-    xxhash64 of (plane, dim) scaled — stable across sessions, no RNG."""
-    h = F.xxhash64(F.lit(plane), F.lit(dim))
-    return (h % 10007).cast("double") / 10007.0
-
-
-def lsh_bucket(vec: Column, num_planes: int = 16) -> Column:
-    """Random-hyperplane LSH bucket id: bit i = sign(vec · plane_i).
-
-    Each plane dot product reuses the same zip-free fold: the plane
-    components are generated per index inside the lambda, so nothing
-    is shuffled or broadcast — the signature is pure per-row compute.
-    """
+def _plane_dots(vec: Column, num_planes: int) -> list[Column]:
+    """``vec``'s dot product with each hash-synthesized hyperplane:
+    plane p's component i is ``xxhash64(p, i) % 10007 / 10007``, made
+    inside the fold's lambda, so nothing is shuffled or broadcast and
+    the planes are stable across sessions with no RNG state. |dot_p|
+    is the margin of ``vec`` to plane p's boundary."""
     def _plane_term(p: int):
         # closure factory — a default-arg lambda would change the
         # higher-order function's visible arity
@@ -181,16 +179,23 @@ def lsh_bucket(vec: Column, num_planes: int = 16) -> Column:
             (F.xxhash64(F.lit(p), i) % 10007).cast("double") / 10007.0
         )
 
-    bits = []
-    for p in range(num_planes):
-        # dot(vec, plane_p) with plane components synthesized from
-        # (p, index) hashes — aggregate over the indexed vector
-        prod = F.aggregate(
+    return [
+        F.aggregate(
             F.zip_with(vec, F.sequence(F.lit(0), F.size(vec) - 1), _plane_term(p)),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
-        bits.append(F.when(prod > 0, F.lit(1 << p).cast("long")).otherwise(F.lit(0).cast("long")))
+        for p in range(num_planes)
+    ]
+
+
+def lsh_bucket(vec: Column, num_planes: int = 16) -> Column:
+    """Random-hyperplane LSH bucket id: bit p = sign(vec · plane_p)
+    (see :func:`_plane_dots`) — pure per-row compute."""
+    bits = [
+        F.when(prod > 0, F.lit(1 << p).cast("long")).otherwise(F.lit(0).cast("long"))
+        for p, prod in enumerate(_plane_dots(vec, num_planes))
+    ]
     bucket = bits[0]
     for b in bits[1:]:
         bucket = bucket + b
@@ -248,7 +253,6 @@ def ivf_fit_centroids(
     At 100 TB the fit runs on ``corpus.sample(...)`` — the quantizer
     only needs a representative sample, not every row.
     """
-    import numpy as np
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.feature import Normalizer
     from pyspark.ml.functions import array_to_vector
@@ -302,7 +306,6 @@ def ivf_assign(
     math: on unit vectors, euclidean argmin over centroids equals
     argmax of (x̂·c − ‖c‖²/2); first-minimum tie-break matches MLlib's
     in-order centroid scan."""
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     cents = (
@@ -326,79 +329,76 @@ def ivf_assign(
     return corpus.withColumn("ivf_cell", _cell(F.col(vec_col)))
 
 
-class IvfIndex:
-    """A built IVF-Flat index: tiny centroid matrix + the cell-assigned
-    corpus table. Build once, search many times — the KMeans quantizer
-    is never refit at query time.
-
-    When ``path`` was given to :func:`ivf_build`, ``table`` is the
-    read-back of a parquet lake partitioned by ``ivf_cell``, so the
-    per-query cell filter prunes to the probed partition directories
-    (static partition pruning) instead of scanning the corpus.
-
-    With ``codebooks`` (built via ``ivf_build(..., pq_m=...)``) the
-    table also carries a PQ ``codes`` column next to the full vectors,
-    enabling the two-stage search :func:`ivf_search` runs when given a
-    ``shortlist``: ADC over the probed cells' CODES (≈32× fewer bytes
-    than the floats), exact cosine only on the shortlist.
-    """
-
-    def __init__(
-        self, table: DataFrame, centroids, vec_col: str, id_col: str, codebooks=None
-    ):
-        self.table = table
-        self.centroids = centroids
-        self.vec_col = vec_col
-        self.id_col = id_col
-        self.codebooks = codebooks
-
-    @property
-    def n_cells(self) -> int:
-        return len(self.centroids)
+# ---------------------------------------------------------------------------
+# The quantized-search core shared by the IVF, LSH, PQ and IVF-PQ
+# indexes (Jégou, Douze & Schmid, TPAMI 2011): an optional coarse
+# partitioner (IVF cells or LSH buckets) picks WHICH rows a query
+# scans, optional PQ codes (operators/pq.py) shrink WHAT each scanned
+# row reads, and an exact cosine pass ranks the final candidates. The
+# steps below (query read, quantizer fit, partitioned persist, index
+# sidecar, probed top-k) each have one implementation; the ADC
+# shortlist, the exact re-rank and the PQ encoder live in
+# operators/pq.py.
 
 
-def ivf_build(
+def _read_query(query_vec: DataFrame, vec_col: str, *extra: Column):
+    """The one query read of every search: collect the query row once
+    (one Spark job; ``extra`` per-query columns such as the LSH
+    signature ride in the same job) and unit-normalize its vector —
+    the space every quantizer here was fit in. Returns ``(q, row)``
+    and raises ``ValueError`` when ``query_vec`` is empty."""
+    row = query_vec.select(F.col(vec_col), *extra).first()
+    if row is None:
+        raise ValueError("query_vec is empty: no row to search for")
+    q = np.asarray(row[0], dtype=np.float64)
+    qn = np.linalg.norm(q)
+    if qn > 0:
+        q = q / qn
+    return q, row
+
+
+def _cosine_topk(
+    cands: DataFrame, query_vec: DataFrame, k: int, vec_col: str, id_col: str
+) -> DataFrame:
+    """Exact cosine top-k of ``cands`` against the first query row:
+    broadcast 1-row query, JVM fold per candidate,
+    TakeOrderedAndProject."""
+    qrow = query_vec.select(F.col(vec_col).alias("qvec")).limit(1)
+    cos = F.round(cosine_expr(F.col(vec_col), F.col("qvec")), 4)
+    return (
+        cands.crossJoin(F.broadcast(qrow))
+        .select(F.col(id_col), cos.alias("cosine"))
+        .orderBy(F.col("cosine").desc(), F.col(id_col))
+        .limit(k)
+    )
+
+
+def _coarse_fit(
     corpus: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_cells: int | str = 16,
-    seed: int = 42,
-    sample_fraction: float | None = None,
-    fit_limit: int | None = 16384,
-    path: str | None = None,
-    pq_m: int | None = None,
-    pq_nbits: int = 8,
-) -> IvfIndex:
-    """Build the IVF index: fit the coarse quantizer on a sample, then
-    assign every corpus row to its cell (one distributed transform).
+    vec_col: str,
+    n_cells: int | str,
+    seed: int,
+    sample_fraction: float | None,
+    fit_limit: int | None,
+):
+    """The one coarse-quantizer fit: spherical KMeans on a bounded
+    sample, then every corpus row assigned its ``ivf_cell`` (one
+    distributed map-only transform). Returns
+    ``(fit_input, centroids, assigned)``; ``fit_input`` is the bounded
+    sample, which callers reuse to fit PQ codebooks.
+
+    ``sample_fraction`` bounds the fit input — at 100 TB the quantizer
+    needs a representative sample, not every row; the full corpus only
+    flows through the (cheap, map-only) assignment. ``fit_limit``
+    hard-caps it regardless: the ``fit_limit`` rows with the smallest
+    ``xxhash64(vector)`` — a deterministic per-partition top-k
+    (TakeOrderedAndProject), never a full sort. Without the cap, a
+    one-shot ``ivf_topk`` at sf10 paid 223 s of full-corpus KMeans for
+    a 10-row answer (SWEEP_r4_sf10); the quantizer fit must be
+    O(sample), only the assignment O(corpus).
 
     ``n_cells="auto"`` sizes the quantizer at ~sqrt(N) rounded to a
-    power of two (clamped [4, 4096]) — the standard IVF sizing rule:
-    finer cells at the same scan fraction trade a bigger centroid scan
-    for better-fitting cell boundaries. Measured on the testdata
-    corpus, 64 cells @ nprobe 8 yields recall-per-scanned-row lift
-    ~3.1 vs ~2.0 for 16 cells @ nprobe 4 at half the scan fraction
-    (tools/ann_recall.py's fine config tracks this).
-
-    ``sample_fraction`` bounds the KMeans fit input — at 100 TB the
-    quantizer needs a representative sample, not every row; the full
-    corpus only flows through the (cheap, map-only) assignment.
-    ``fit_limit`` (default 16384) hard-caps the fit input regardless:
-    the ``fit_limit`` rows with the smallest ``xxhash64(vector)`` — a
-    deterministic per-partition top-k (TakeOrderedAndProject), never
-    a full sort. Without the cap, a one-shot ``ivf_topk`` at sf10 paid
-    223 s of full-corpus KMeans for a 10-row answer (SWEEP_r4_sf10);
-    the quantizer fit must be O(sample), only the assignment O(corpus).
-    ``path`` persists the assignment partitioned by ``ivf_cell`` so
-    later searches read only the probed cells' directories.
-
-    ``pq_m`` additionally fits PQ codebooks (sample-bounded, same rule
-    as the quantizer) and attaches a ``codes`` column: the IVF-Flat
-    recall ceiling is candidate MEMBERSHIP (in-cell scoring is already
-    exact cosine), and membership only widens by probing more cells —
-    affordable exactly when the probe scan reads code bytes, not float
-    bytes. See :func:`ivf_search`'s ``shortlist`` stage.
-    """
+    power of two (clamped [4, 4096]) — the standard IVF sizing rule."""
     fit_input = (
         corpus.sample(fraction=sample_fraction, seed=seed)
         if sample_fraction is not None
@@ -419,25 +419,187 @@ def ivf_build(
         # applied AFTER auto-sizing — the cell count keys off corpus
         # size, the KMeans fit off the bounded sample
         fit_input = fit_input.orderBy(F.xxhash64(F.col(vec_col))).limit(fit_limit)
-    model, centroids = ivf_fit_centroids(fit_input, vec_col, n_cells, seed)
-    assigned = ivf_assign(corpus, model, vec_col)
-    codebooks = None
-    if pq_m is not None:
-        from .pq import pq_encode_df, pq_fit_codebooks  # lazy: pq imports us
+    _, centroids = ivf_fit_centroids(fit_input, vec_col, n_cells, seed)
+    return fit_input, centroids, ivf_assign(corpus, centroids, vec_col)
 
-        codebooks = pq_fit_codebooks(
-            fit_input, vec_col, m=pq_m, nbits=pq_nbits, seed=seed
-        )
-        assigned = pq_encode_df(assigned, codebooks, vec_col)
-    if path is not None:
-        (
-            assigned.repartition("ivf_cell")
-            .write.mode("overwrite")
-            .partitionBy("ivf_cell")
-            .parquet(path)
-        )
-        assigned = corpus.sparkSession.read.parquet(path)
-    return IvfIndex(assigned, centroids, vec_col, id_col, codebooks=codebooks)
+
+def _with_pq_codes(
+    df: DataFrame, fit_src: DataFrame, vec_col: str, pq_m, pq_nbits: int, seed: int
+):
+    """Attach a PQ ``codes`` column to an IVF/LSH index table when
+    ``pq_m`` is set (codebooks fit on ``fit_src``'s bounded sample).
+    Returns ``(df, codebooks or None)``."""
+    if pq_m is None:
+        return df, None
+    from .pq import pq_encode_df, pq_fit_codebooks  # lazy: pq imports us
+
+    codebooks = pq_fit_codebooks(fit_src, vec_col, m=pq_m, nbits=pq_nbits, seed=seed)
+    return pq_encode_df(df, codebooks, vec_col), codebooks
+
+
+def _persist_partitioned(df: DataFrame, path: str | None, partition_col: str) -> DataFrame:
+    """Persist an index table as a parquet lake with one directory per
+    ``partition_col`` value and return its read-back, so per-query
+    cell/bucket predicates prune to the probed directories (static
+    partition pruning) instead of scanning the corpus. ``path=None``
+    keeps the lazy in-memory table."""
+    if path is None:
+        return df
+    (
+        df.repartition(partition_col)
+        .write.mode("overwrite")
+        .partitionBy(partition_col)
+        .parquet(path)
+    )
+    return df.sparkSession.read.parquet(path)
+
+
+def _sidecar_write(index, path: str) -> None:
+    """Write a persisted index's frozen state — every field but
+    ``table`` that is set, arrays as nested lists — plus its
+    ``format`` tag to its ``SIDECAR`` json under ``path``
+    (underscore-prefixed, so Spark's parquet reader ignores it)."""
+    meta = {"format": index.FORMAT}
+    for f in dataclasses.fields(index):
+        v = getattr(index, f.name)
+        if f.name != "table" and v is not None:
+            meta[f.name] = v.tolist() if isinstance(v, np.ndarray) else v
+    with open(os.path.join(path, index.SIDECAR), "w") as fh:
+        json.dump(meta, fh)
+
+
+def _sidecar_load(cls, spark: SparkSession, path: str):
+    """Reload an index written by :func:`_sidecar_write`: the lake
+    under ``path`` plus the sidecar's frozen state (lists back to
+    float arrays); fields the sidecar lacks keep their defaults."""
+    with open(os.path.join(path, cls.SIDECAR)) as fh:
+        meta = json.load(fh)
+    state = {
+        f.name: np.asarray(meta[f.name], dtype=float)
+        if isinstance(meta[f.name], list)
+        else meta[f.name]
+        for f in dataclasses.fields(cls)
+        if f.name != "table" and f.name in meta
+    }
+    return cls(spark.read.parquet(path), **state)
+
+
+def _probed_topk(
+    index, probed: DataFrame, q, query_vec: DataFrame, k: int, shortlist: int | None
+) -> DataFrame:
+    """Top-k over the probed rows of an IVF or LSH index: exact cosine
+    on their vectors, or — with ``shortlist`` (needs a ``pq_m`` build)
+    — ADC over their codes picks ``shortlist`` candidates and exact
+    cosine re-ranks only those, reading the vectors the index already
+    stores (operators/pq.py ``_adc_topk``)."""
+    if shortlist is None:
+        return _cosine_topk(probed, query_vec, k, index.vec_col, index.id_col)
+    if index.codebooks is None:
+        raise ValueError("shortlist search needs PQ codes: build the index with pq_m=...")
+    from .pq import _adc_topk  # lazy: pq imports us at module level
+
+    # column-pruned: the ADC stage reads (id, codes) only — never the
+    # float vectors sitting in the same files
+    return _adc_topk(
+        probed.select(index.id_col, "codes"),
+        q,
+        index,
+        query_vec,
+        k,
+        shortlist,
+        rerank_from=index.table.select(index.id_col, index.vec_col),
+    )
+
+
+def _append_rows(index, rows: DataFrame, path: str, partition_col: str) -> None:
+    """Append partition-keyed rows to a persisted IVF/LSH index, PQ
+    codes encoded against the index's FROZEN codebooks when it has
+    them, via :func:`staged_append`."""
+    if index.codebooks is not None:
+        from .pq import pq_encode_df  # lazy: pq imports us at module level
+
+        rows = pq_encode_df(rows, index.codebooks, index.vec_col)
+    staged_append(rows, path, partition_col)
+
+
+@dataclasses.dataclass(eq=False)
+class IvfIndex:
+    """A built IVF-Flat index: tiny centroid matrix + the cell-assigned
+    corpus table. Build once, search many times — the KMeans quantizer
+    is never refit at query time.
+
+    When ``path`` was given to :func:`ivf_build`, ``table`` is the
+    read-back of a parquet lake partitioned by ``ivf_cell``, so the
+    per-query cell filter prunes to the probed partition directories
+    (static partition pruning) instead of scanning the corpus.
+
+    With ``codebooks`` (built via ``ivf_build(..., pq_m=...)``) the
+    table also carries a PQ ``codes`` column next to the full vectors,
+    enabling the two-stage search :func:`ivf_search` runs when given a
+    ``shortlist``: ADC over the probed cells' CODES (≈32× fewer bytes
+    than the floats), exact cosine only on the shortlist.
+    """
+
+    table: DataFrame
+    centroids: np.ndarray
+    vec_col: str
+    id_col: str
+    codebooks: np.ndarray | None = None
+
+    SIDECAR: ClassVar[str] = "_ivf_meta.json"
+    FORMAT: ClassVar[str] = "ivf-flat"
+
+    @property
+    def n_cells(self) -> int:
+        return len(self.centroids)
+
+
+def ivf_build(
+    corpus: DataFrame,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    n_cells: int | str = 16,
+    seed: int = 42,
+    sample_fraction: float | None = None,
+    fit_limit: int | None = 16384,
+    path: str | None = None,
+    pq_m: int | None = None,
+    pq_nbits: int = 8,
+) -> IvfIndex:
+    """Build the IVF index: fit the coarse quantizer on a bounded
+    sample and assign every corpus row to its cell (see
+    :func:`_coarse_fit` for ``n_cells="auto"``, ``sample_fraction``
+    and ``fit_limit``). Measured on the testdata corpus, 64 cells @
+    nprobe 8 yields recall-per-scanned-row lift ~3.1 vs ~2.0 for 16
+    cells @ nprobe 4 at half the scan fraction (tools/ann_recall.py's
+    fine config tracks this). ``path`` persists the assignment
+    partitioned by ``ivf_cell`` so later searches read only the probed
+    cells' directories.
+
+    ``pq_m`` additionally fits PQ codebooks (sample-bounded, same rule
+    as the quantizer) and attaches a ``codes`` column: the IVF-Flat
+    recall ceiling is candidate MEMBERSHIP (in-cell scoring is already
+    exact cosine), and membership only widens by probing more cells —
+    affordable exactly when the probe scan reads code bytes, not float
+    bytes. See :func:`ivf_search`'s ``shortlist`` stage.
+    """
+    fit_input, centroids, assigned = _coarse_fit(
+        corpus, vec_col, n_cells, seed, sample_fraction, fit_limit
+    )
+    assigned, codebooks = _with_pq_codes(
+        assigned, fit_input, vec_col, pq_m, pq_nbits, seed
+    )
+    table = _persist_partitioned(assigned, path, "ivf_cell")
+    return IvfIndex(table, centroids, vec_col, id_col, codebooks)
+
+
+def ivf_probe(index, query_vec: DataFrame, nprobe: int):
+    """The query read plus the IVF cell choice, for an IVF or IVF-PQ
+    index: the ``nprobe`` cells whose centroids are nearest the unit
+    query (euclidean on the unit sphere orders like cosine). Returns
+    ``(q, cells)``."""
+    q, _ = _read_query(query_vec, index.vec_col)
+    return q, np.argsort(((index.centroids - q) ** 2).sum(axis=1))[:nprobe].tolist()
 
 
 def ivf_search(
@@ -456,72 +618,14 @@ def ivf_search(
     cosine re-rank is the standard FAISS IVF-Flat shape.
 
     ``shortlist`` (requires a ``pq_m`` build) switches to the
-    two-stage scan PQ search proved out (recall 0.595 → ≥0.9 on the
-    harness corpus): ADC over the probed cells' ``codes`` column picks
-    ``shortlist`` candidates reading ~m bytes/row instead of dim·4,
-    then :func:`operators.pq._exact_rerank` re-scores ONLY those rows
-    with true cosine from the vectors the index already stores. The
-    float read is |shortlist| rows, so ``nprobe`` can widen far enough
-    to fix the MEMBERSHIP misses that cap plain IVF-Flat recall while
-    total bytes stay ≈ (probed rows)·m + |shortlist|·dim·4 — pass a
+    two-stage scan (recall 0.595 → ≥0.9 on the harness corpus; see
+    :func:`_probed_topk`), so ``nprobe`` can widen far enough to fix
+    the MEMBERSHIP misses that cap plain IVF-Flat recall — pass a
     wider ``nprobe`` (e.g. 12 of 16) together with ``shortlist``.
     """
-    import numpy as np
-
-    q = np.array(query_vec.select(index.vec_col).first()[0], dtype=float)
-    qn = np.linalg.norm(q)
-    if qn > 0:
-        q = q / qn  # match the quantizer's unit-sphere space
-    probed = np.argsort(((index.centroids - q) ** 2).sum(axis=1))[:nprobe].tolist()
-    cells = index.table.filter(F.col("ivf_cell").isin(probed))
-
-    if shortlist is not None:
-        if index.codebooks is None:
-            raise ValueError(
-                "shortlist search needs PQ codes: build with ivf_build(..., pq_m=...)"
-            )
-        from .pq import (  # lazy: pq imports us at module level
-            ISIN_PUSHDOWN_MAX,
-            _exact_rerank,
-            _lut_row,
-            adc_score_expr,
-        )
-
-        qrow = query_vec.select(index.vec_col).first()
-        lut_df = _lut_row(index.table.sparkSession, index.codebooks, qrow[0])
-        kk = int(np.asarray(index.codebooks).shape[1])
-        adc_top = (
-            # column-pruned: the ADC stage reads (id, cell, codes) only —
-            # never the float vectors sitting in the same files
-            cells.select(index.id_col, "codes")
-            .crossJoin(F.broadcast(lut_df))
-            .select(
-                F.col(index.id_col),
-                F.round(adc_score_expr(F.col("codes"), F.col("lut"), kk), 4).alias(
-                    "adc_score"
-                ),
-            )
-            .orderBy(F.col("adc_score").desc(), F.col(index.id_col))
-            .limit(shortlist)
-        )
-        return _exact_rerank(
-            adc_top,
-            index.table.select(index.id_col, index.vec_col),
-            query_vec.select(F.col(index.vec_col)),
-            k,
-            index.vec_col,
-            index.id_col,
-            isin_pushdown=shortlist <= ISIN_PUSHDOWN_MAX,
-        )
-
-    qdf = query_vec.select(F.col(index.vec_col).alias("qvec")).limit(1)
-    cos = F.round(cosine_expr(F.col(index.vec_col), F.col("qvec")), 4)
-    return (
-        cells.crossJoin(F.broadcast(qdf))
-        .select(F.col(index.id_col), cos.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(index.id_col))
-        .limit(k)
-    )
+    q, cells = ivf_probe(index, query_vec, nprobe)
+    probed = index.table.filter(F.col("ivf_cell").isin(cells))
+    return _probed_topk(index, probed, q, query_vec, k, shortlist)
 
 
 def ivf_topk(
@@ -555,17 +659,13 @@ def ivf_index_write(
 ) -> IvfIndex:
     """Persist a reloadable, APPENDABLE IVF index: :func:`ivf_build`'s
     cell-partitioned assignment lake plus a ``_ivf_meta.json`` sidecar
-    carrying the centroid matrix and column names (underscore-prefixed
-    so Spark's parquet reader ignores it). This closes the same
-    ingest loop the MinHash/winnow indexes have: build once, then
-    :func:`ivf_index_append` new batches in O(batch) — assignment
-    against the FROZEN quantizer, appended into the existing cell
-    directories, so searches keep pruning to probed cells with no
-    refit and no corpus rewrite (the standard FAISS ``add()``
-    contract: centroids drift only when you rebuild)."""
-    import json
-    import os
-
+    carrying the centroid matrix, any PQ codebooks and the column
+    names. This closes the same ingest loop the MinHash/winnow indexes
+    have: build once, then :func:`ivf_index_append` new batches in
+    O(batch) — assignment against the FROZEN quantizer, appended into
+    the existing cell directories, so searches keep pruning to probed
+    cells with no refit and no corpus rewrite (the standard FAISS
+    ``add()`` contract: centroids drift only when you rebuild)."""
     index = ivf_build(
         corpus,
         vec_col,
@@ -578,40 +678,14 @@ def ivf_index_write(
         pq_m=pq_m,
         pq_nbits=pq_nbits,
     )
-    meta = {
-        "format": "ivf-flat",
-        "vec_col": vec_col,
-        "id_col": id_col,
-        "centroids": index.centroids.tolist(),
-    }
-    if index.codebooks is not None:
-        # frozen with the quantizer: appended batches encode against
-        # these codebooks, the same no-refit contract as the centroids
-        meta["codebooks"] = index.codebooks.tolist()
-    with open(os.path.join(path, "_ivf_meta.json"), "w") as fh:
-        json.dump(meta, fh)
+    _sidecar_write(index, path)
     return index
 
 
 def ivf_index_load(spark: SparkSession, path: str) -> IvfIndex:
     """Reload a persisted IVF index: the cell-partitioned lake plus
-    the frozen centroid matrix from the sidecar."""
-    import json
-    import os
-
-    import numpy as np
-
-    with open(os.path.join(path, "_ivf_meta.json")) as fh:
-        meta = json.load(fh)
-    table = spark.read.parquet(path)
-    cb = meta.get("codebooks")
-    return IvfIndex(
-        table,
-        np.asarray(meta["centroids"], dtype=float),
-        meta["vec_col"],
-        meta["id_col"],
-        codebooks=None if cb is None else np.asarray(cb, dtype=float),
-    )
+    the frozen centroid matrix (and any codebooks) from the sidecar."""
+    return _sidecar_load(IvfIndex, spark, path)
 
 
 def ivf_index_append(spark: SparkSession, path: str, batch: DataFrame) -> None:
@@ -627,14 +701,11 @@ def ivf_index_append(spark: SparkSession, path: str, batch: DataFrame) -> None:
     failed append is never reader-visible; see that docstring for the
     exact visibility contract."""
     index = ivf_index_load(spark, path)
-    assigned = ivf_assign(batch, index.centroids, index.vec_col)
-    if index.codebooks is not None:
-        from .pq import pq_encode_df  # lazy: pq imports us at module level
-
-        assigned = pq_encode_df(assigned, index.codebooks, index.vec_col)
-    staged_append(assigned, path, "ivf_cell")
+    rows = ivf_assign(batch, index.centroids, index.vec_col)
+    _append_rows(index, rows, path, "ivf_cell")
 
 
+@dataclasses.dataclass(eq=False)
 class LshIndex:
     """A built hyperplane-LSH index: the bucket-assigned corpus table.
     Build once, search many times. When ``path`` was given to
@@ -644,19 +715,14 @@ class LshIndex:
     pq_m=...)``) the table also carries PQ ``codes`` for the
     two-stage ``shortlist`` search in :func:`lsh_search`."""
 
-    def __init__(
-        self,
-        table: DataFrame,
-        num_planes: int,
-        vec_col: str,
-        id_col: str,
-        codebooks=None,
-    ):
-        self.table = table
-        self.num_planes = num_planes
-        self.vec_col = vec_col
-        self.id_col = id_col
-        self.codebooks = codebooks
+    table: DataFrame
+    num_planes: int
+    vec_col: str
+    id_col: str
+    codebooks: np.ndarray | None = None
+
+    SIDECAR: ClassVar[str] = "_lsh_meta.json"
+    FORMAT: ClassVar[str] = "hyperplane-lsh"
 
 
 def lsh_build(
@@ -676,23 +742,11 @@ def lsh_build(
     ``codes`` column, enabling the wide-probe + exact-rerank search
     (see :func:`lsh_search`'s ``shortlist``)."""
     bucketed = corpus.withColumn("bucket", lsh_bucket(F.col(vec_col), num_planes))
-    codebooks = None
-    if pq_m is not None:
-        from .pq import pq_encode_df, pq_fit_codebooks  # lazy: pq imports us
-
-        codebooks = pq_fit_codebooks(
-            corpus, vec_col, m=pq_m, nbits=pq_nbits, seed=seed
-        )
-        bucketed = pq_encode_df(bucketed, codebooks, vec_col)
-    if path is not None:
-        (
-            bucketed.repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(path)
-        )
-        bucketed = corpus.sparkSession.read.parquet(path)
-    return LshIndex(bucketed, num_planes, vec_col, id_col, codebooks=codebooks)
+    bucketed, codebooks = _with_pq_codes(
+        bucketed, corpus, vec_col, pq_m, pq_nbits, seed
+    )
+    table = _persist_partitioned(bucketed, path, "bucket")
+    return LshIndex(table, num_planes, vec_col, id_col, codebooks)
 
 
 def lsh_index_write(
@@ -712,41 +766,15 @@ def lsh_index_write(
     count lands in the right directories forever. With ``pq_m`` the
     sidecar also freezes the fitted PQ codebooks (appends encode
     against them, never refit — same contract as the IVF centroids)."""
-    import json
-    import os
-
     index = lsh_build(corpus, vec_col, id_col, num_planes, path=path, pq_m=pq_m, pq_nbits=pq_nbits)
-    meta = {
-        "format": "hyperplane-lsh",
-        "vec_col": vec_col,
-        "id_col": id_col,
-        "num_planes": num_planes,
-    }
-    if index.codebooks is not None:
-        meta["codebooks"] = index.codebooks.tolist()
-    with open(os.path.join(path, "_lsh_meta.json"), "w") as fh:
-        json.dump(meta, fh)
+    _sidecar_write(index, path)
     return index
 
 
 def lsh_index_load(spark: SparkSession, path: str) -> LshIndex:
     """Reload a persisted LSH index (lake + plane count + any frozen
     PQ codebooks)."""
-    import json
-    import os
-
-    import numpy as np
-
-    with open(os.path.join(path, "_lsh_meta.json")) as fh:
-        meta = json.load(fh)
-    cb = meta.get("codebooks")
-    return LshIndex(
-        spark.read.parquet(path),
-        meta["num_planes"],
-        meta["vec_col"],
-        meta["id_col"],
-        codebooks=None if cb is None else np.asarray(cb, dtype=float),
-    )
+    return _sidecar_load(LshIndex, spark, path)
 
 
 def lsh_index_append(spark: SparkSession, path: str, batch: DataFrame) -> None:
@@ -757,14 +785,10 @@ def lsh_index_append(spark: SparkSession, path: str, batch: DataFrame) -> None:
     Indexes built with PQ codes encode the batch against the frozen
     codebooks in the same map."""
     index = lsh_index_load(spark, path)
-    bucketed = batch.withColumn(
+    rows = batch.withColumn(
         "bucket", lsh_bucket(F.col(index.vec_col), index.num_planes)
     )
-    if index.codebooks is not None:
-        from .pq import pq_encode_df  # lazy: pq imports us at module level
-
-        bucketed = pq_encode_df(bucketed, index.codebooks, index.vec_col)
-    staged_append(bucketed, path, "bucket")
+    _append_rows(index, rows, path, "bucket")
 
 
 def lsh_probe_buckets(q_bucket: int, num_planes: int, multi_probe: int) -> list[int]:
@@ -785,30 +809,6 @@ def lsh_probe_buckets(q_bucket: int, num_planes: int, multi_probe: int) -> list[
     return sorted(buckets)
 
 
-def lsh_plane_dots(query_vec: DataFrame, vec_col: str, num_planes: int) -> list[float]:
-    """The query's raw dot product against each hash-synthesized
-    hyperplane — one 1-row Spark job over the same JVM expressions
-    :func:`lsh_bucket` folds into sign bits. |dot_p| is the margin of
-    the query to plane p's boundary: the confidence that true
-    neighbors share bit p."""
-    def _plane_term(p: int):
-        return lambda x, i: x.cast("double") * (
-            (F.xxhash64(F.lit(p), i) % 10007).cast("double") / 10007.0
-        )
-
-    vec = F.col(vec_col)
-    exprs = [
-        F.aggregate(
-            F.zip_with(vec, F.sequence(F.lit(0), F.size(vec) - 1), _plane_term(p)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias(f"d{p}")
-        for p in range(num_planes)
-    ]
-    row = query_vec.select(*exprs).first()
-    return [float(row[p]) for p in range(num_planes)]
-
-
 def lsh_directed_probes(
     q_bucket: int, dots: list[float], probe_budget: int
 ) -> list[int]:
@@ -821,8 +821,6 @@ def lsh_directed_probes(
     (query bucket first). Pure driver-side metadata: all 2^planes
     flip masks are scored with one numpy pass (planes ≤ 20 enforced —
     beyond that, signatures are too fine for bucket probing anyway)."""
-    import numpy as np
-
     num_planes = len(dots)
     if num_planes > 20:
         raise ValueError("directed probing enumerates 2^planes masks; use <= 20 planes")
@@ -837,6 +835,32 @@ def lsh_directed_probes(
     return [int(q_bucket ^ int(m)) for m in order]
 
 
+def lsh_probe(
+    index: LshIndex,
+    query_vec: DataFrame,
+    multi_probe: int = 0,
+    probe_budget: int | None = None,
+):
+    """The query read plus the LSH bucket choice: the query's bucket
+    and every bucket within Hamming distance ``multi_probe`` of it
+    (:func:`lsh_probe_buckets`) or, with ``probe_budget``, the
+    query-directed probe set ranked by the query's plane dots
+    (:func:`lsh_directed_probes`). The signature or the plane dots are
+    computed in the same 1-row Spark job that collects the query
+    vector. Returns ``(q, buckets)``."""
+    vec = F.col(index.vec_col)
+    if probe_budget is not None:
+        dots = [d.alias(f"d{p}") for p, d in enumerate(_plane_dots(vec, index.num_planes))]
+        q, row = _read_query(query_vec, index.vec_col, *dots)
+        dots = [float(d) for d in row[1:]]
+        q_bucket = sum(1 << p for p, d in enumerate(dots) if d > 0)
+        return q, lsh_directed_probes(q_bucket, dots, probe_budget)
+    q, row = _read_query(
+        query_vec, index.vec_col, lsh_bucket(vec, index.num_planes).alias("bucket")
+    )
+    return q, lsh_probe_buckets(row[1], index.num_planes, multi_probe)
+
+
 def lsh_search(
     index: LshIndex,
     query_vec: DataFrame,
@@ -847,82 +871,22 @@ def lsh_search(
 ) -> DataFrame:
     """Search a built LSH index: scan the query's bucket, plus — with
     ``multi_probe`` > 0 — every bucket within that Hamming distance of
-    the query signature (see :func:`lsh_probe_buckets`). Candidates
-    grow by ~C(planes, multi_probe) buckets while the corpus scan
-    stays bucket-bounded. ``probe_budget`` replaces the Hamming ball
-    with query-DIRECTED probing (see :func:`lsh_directed_probes`):
-    the budgeted number of buckets ranked by flipped-bit margin —
-    strictly better membership per probed bucket, at the cost of one
-    extra 1-row Spark job for the plane dots.
+    the query signature. Candidates grow by ~C(planes, multi_probe)
+    buckets while the corpus scan stays bucket-bounded.
+    ``probe_budget`` replaces the Hamming ball with query-DIRECTED
+    probing: the budgeted number of buckets ranked by flipped-bit
+    margin — strictly better membership per probed bucket (see
+    :func:`lsh_probe`).
 
-    ``shortlist`` (requires a ``pq_m`` build) runs the two-stage scan:
-    ADC over the probed buckets' ``codes`` (~m bytes/row), exact
-    cosine only on the ``shortlist`` winners read back from the
-    index's own vectors. Plain LSH recall is capped by bucket
+    ``shortlist`` (requires a ``pq_m`` build) runs the two-stage scan
+    (see :func:`_probed_topk`). Plain LSH recall is capped by bucket
     MEMBERSHIP — in-bucket scoring is already exact — and membership
     only widens by probing more buckets, which is affordable exactly
     when the probe reads code bytes: pass a wide probe set (e.g.
-    ``probe_budget≈half the buckets``) together with ``shortlist``
-    and total bytes stay ≈ (probed rows)·m + |shortlist|·dim·4."""
-    qrow = query_vec.select(F.col(index.vec_col).alias("qvec")).limit(1)
-    if probe_budget is not None:
-        dots = lsh_plane_dots(query_vec, index.vec_col, index.num_planes)
-        q_bucket = sum(1 << p for p, d in enumerate(dots) if d > 0)
-        buckets = lsh_directed_probes(q_bucket, dots, probe_budget)
-    else:
-        q_bucket_df = qrow.withColumn(
-            "bucket", lsh_bucket(F.col("qvec"), index.num_planes)
-        )
-        q_bucket = q_bucket_df.select("bucket").first()[0]
-        buckets = lsh_probe_buckets(q_bucket, index.num_planes, multi_probe)
+    ``probe_budget≈half the buckets``) together with ``shortlist``."""
+    q, buckets = lsh_probe(index, query_vec, multi_probe, probe_budget)
     probed = index.table.filter(F.col("bucket").isin(buckets))
-
-    if shortlist is not None:
-        if index.codebooks is None:
-            raise ValueError(
-                "shortlist search needs PQ codes: build with lsh_build(..., pq_m=...)"
-            )
-        import numpy as np
-
-        from .pq import (  # lazy: pq imports us at module level
-            ISIN_PUSHDOWN_MAX,
-            _exact_rerank,
-            _lut_row,
-            adc_score_expr,
-        )
-
-        q = query_vec.select(index.vec_col).first()
-        lut_df = _lut_row(index.table.sparkSession, index.codebooks, q[0])
-        kk = int(np.asarray(index.codebooks).shape[1])
-        adc_top = (
-            probed.select(index.id_col, "codes")
-            .crossJoin(F.broadcast(lut_df))
-            .select(
-                F.col(index.id_col),
-                F.round(adc_score_expr(F.col("codes"), F.col("lut"), kk), 4).alias(
-                    "adc_score"
-                ),
-            )
-            .orderBy(F.col("adc_score").desc(), F.col(index.id_col))
-            .limit(shortlist)
-        )
-        return _exact_rerank(
-            adc_top,
-            index.table.select(index.id_col, index.vec_col),
-            query_vec.select(F.col(index.vec_col)),
-            k,
-            index.vec_col,
-            index.id_col,
-            isin_pushdown=shortlist <= ISIN_PUSHDOWN_MAX,
-        )
-
-    cos = F.round(cosine_expr(F.col(index.vec_col), F.col("qvec")), 4)
-    return (
-        probed.crossJoin(F.broadcast(qrow))
-        .select(F.col(index.id_col), cos.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(index.id_col))
-        .limit(k)
-    )
+    return _probed_topk(index, probed, q, query_vec, k, shortlist)
 
 
 def lsh_topk(

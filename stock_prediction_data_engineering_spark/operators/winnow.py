@@ -58,6 +58,7 @@ north-star LLM-curation surface (BASELINE.json).
 from __future__ import annotations
 
 import hashlib
+import os
 
 import numpy as np
 import pandas as pd
@@ -65,6 +66,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 from pyspark.sql.window import Window
+
+from .dedup import _check_index_meta, _index_meta_path, _write_index_meta
 
 
 def _kgram_hash(txt: Column, pos: Column, k: int) -> Column:
@@ -472,7 +475,22 @@ def winnow_index_write(
     corpus scan to those partition directories, so re-checking a new
     batch for verbatim overlap against a standing corpus is O(batch ×
     matched buckets), never O(corpus). ``mode="append"`` admits a
-    probed batch into the index (the incremental-ingest loop)."""
+    probed batch into the index (the incremental-ingest loop).
+
+    The index carries a ``_meta.json`` recording (k, w, n_buckets);
+    append and probe validate it and fail fast on mismatch (the
+    MinHash index's contract, operators/dedup.py _check_index_meta).
+    Appending to an EMPTY path is index creation and writes the
+    meta."""
+    params = _winnow_params(k, w, n_buckets)
+    if mode == "append" and os.path.isdir(
+        os.path.join(os.path.dirname(_index_meta_path(path)), "fps")
+    ):
+        # validate BEFORE writing a single row, so a mismatch can
+        # never mix two k-gram grains in one index
+        _check_index_meta(
+            path, "winnow_index_write(mode='append')", params, "winnow_index_write"
+        )
     min_len = k + w - 1
     par = docs.sparkSession.sparkContext.defaultParallelism
     flt = docs.filter(F.length(text_col) >= min_len)
@@ -497,6 +515,11 @@ def winnow_index_write(
         .parquet(f"{path}/fps")
     )
     members.write.mode(mode).parquet(f"{path}/members")
+    _write_index_meta(path, params)
+
+
+def _winnow_params(k: int, w: int, n_buckets: int) -> dict:
+    return {"format": "winnow", "k": k, "w": w, "n_buckets": n_buckets}
 
 
 def winnow_index_probe(
@@ -511,8 +534,10 @@ def winnow_index_probe(
     min_shared: int = 1,
 ) -> DataFrame:
     """Verbatim-overlap hits of ``new_docs`` against a persisted
-    winnowing index (same k/w/n_buckets as the build — caller owns
-    that contract). Returns (new_id, corpus_id, shared_fp).
+    winnowing index (same k/w/n_buckets as the build — enforced
+    against the index's ``_meta.json``: a mismatch would hash other
+    k-grams or prune to the wrong buckets and silently return no or
+    only some hits). Returns (new_id, corpus_id, shared_fp).
 
     Scale shape (the minhash_index_probe discipline): the batch
     collapses to one representative per distinct text and its
@@ -522,6 +547,12 @@ def winnow_index_probe(
     the pruned scan) are dropped before pairing, bounding every
     posting; member pairs are restored by output-bound joins through
     ``members/``. No corpus shuffle anywhere."""
+    _check_index_meta(
+        path,
+        "winnow_index_probe",
+        _winnow_params(k, w, n_buckets),
+        "winnow_index_write",
+    )
     min_len = k + w - 1
     par = new_docs.sparkSession.sparkContext.defaultParallelism
     spark = new_docs.sparkSession

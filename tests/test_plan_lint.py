@@ -5,12 +5,16 @@ Round 6 found two latent O(words²)-per-doc lambda inlines
 (boilerplate_ngrams, ngram_jaccard_pairs) only because the tool was
 written and run late — this test makes the next instance a red bar.
 
-Checks per registered query's optimized plan at sf0.001:
+Checks per registered query at sf0.001, through the tool's own
+per-query finding path (``plan_findings``), so the test and the tool
+cannot disagree:
 - heavy-expr-in-lambda (the CollapseProject re-eval trap — a
   split/md5/sha/regexp/from_json subtree inlined INSIDE a
   lambdafunction body re-evaluates once per array element),
 - CartesianProduct (an unbroadcast cross join),
-- BatchEvalPython (a row-at-a-time Python scan).
+- BatchEvalPython (a row-at-a-time Python scan),
+- estimate-blind-broadcast (physical plan: more BroadcastExchanges
+  over an explode or checkpoint scan than explicit broadcast hints).
 
 The allowlist is asserted EXACTLY: every allowlisted finding must
 actually be present, so a fixed query can't leave a stale mask behind
@@ -29,7 +33,7 @@ from stock_prediction_data_engineering_spark import registry
 sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
 )
-from plan_lint import ALLOWLIST, lint_plan  # noqa: E402
+from plan_lint import ALLOWLIST, allowlist_entry, lint_plan, plan_findings  # noqa: E402
 
 
 def test_all_registered_plans_are_lint_clean(spark):
@@ -39,19 +43,15 @@ def test_all_registered_plans_are_lint_clean(spark):
     errors: dict[str, str] = {}
     for name, fn in sorted(registry.QUERIES.items()):
         try:
-            plan = (
-                fn(spark, SF_SMOKE)
-                ._jdf.queryExecution()
-                .optimizedPlan()
-                .toString()
-            )
+            finds, _ = plan_findings(fn(spark, SF_SMOKE))
         except Exception as exc:  # noqa: BLE001 — a broken build is its
             # own failure; report it here rather than aborting the sweep
             errors[name] = f"{type(exc).__name__}: {exc}"[:200]
             continue
-        for find in lint_plan(plan):
-            if (name, find) in ALLOWLIST:
-                seen_allowlisted.add((name, find))
+        for find in finds:
+            key = allowlist_entry(name, find)
+            if key is not None:
+                seen_allowlisted.add(key)
             else:
                 flagged.setdefault(name, []).append(find)
     assert not errors, f"queries failed to build a plan: {errors}"

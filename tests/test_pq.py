@@ -162,12 +162,20 @@ def test_pq_beats_random_baseline(emb, index):
 
 def test_empty_query_raises_clear_error(emb, index, ivfpq_index):
     """An empty query DataFrame must raise a diagnosable ValueError,
-    not an opaque TypeError from first() returning None."""
+    not an opaque TypeError from first() returning None — from every
+    search, since they share one query read."""
     none_q = emb.filter(F.lit(False))
     with pytest.raises(ValueError, match="query_vec is empty"):
         pq.pq_search(index, none_q, k=3)
     with pytest.raises(ValueError, match="query_vec is empty"):
         pq.ivfpq_search(ivfpq_index, none_q, k=3)
+    with pytest.raises(ValueError, match="query_vec is empty"):
+        similarity.ivf_search(similarity.ivf_build(emb, n_cells=4), none_q, k=3)
+    lsh = similarity.lsh_build(emb, num_planes=4)
+    with pytest.raises(ValueError, match="query_vec is empty"):
+        similarity.lsh_search(lsh, none_q, k=3)
+    with pytest.raises(ValueError, match="query_vec is empty"):
+        similarity.lsh_search(lsh, none_q, k=3, probe_budget=4)
 
 
 def test_rerank_full_shortlist_equals_brute_force(emb, index):
@@ -245,14 +253,15 @@ def test_ivfpq_index_write_load_append(emb, tmp_path, spark):
     """Persisted appendable IVF-PQ: the sidecar round-trips centroids
     and codebooks exactly; appended batches are encoded bit-identically
     to the build-time encoder against the frozen quantizers."""
+    import json
     import os
 
     from stock_prediction_data_engineering_spark.operators.pq import (
-        _ivfpq_encode,
         ivfpq_index_append,
         ivfpq_index_load,
         ivfpq_index_write,
         ivfpq_search,
+        pq_encode_df,
     )
     from stock_prediction_data_engineering_spark.operators.similarity import (
         ivf_assign,
@@ -266,6 +275,12 @@ def test_ivfpq_index_write_load_append(emb, tmp_path, spark):
     loaded = ivfpq_index_load(spark, path)
     assert np.allclose(loaded.centroids, built.centroids)
     assert np.allclose(loaded.codebooks, built.codebooks)
+    assert loaded.vec_col == built.vec_col == "embedding"
+    # the sidecar's keys are the on-disk format older indexes carry
+    with open(os.path.join(path, "_ivfpq_meta.json")) as fh:
+        assert set(json.load(fh)) == {
+            "format", "vec_col", "id_col", "centroids", "codebooks"
+        }
 
     qv = emb.filter(F.col("vec_id") == 1).select("embedding")
     assert [tuple(r) for r in ivfpq_search(loaded, qv, k=5).collect()] == [
@@ -279,12 +294,10 @@ def test_ivfpq_index_write_load_append(emb, tmp_path, spark):
     # quantizers (bit-identical ingest)
     fresh = {
         (r.vec_id, r.ivf_cell, tuple(r.codes))
-        for r in _ivfpq_encode(
+        for r in pq_encode_df(
             ivf_assign(batch, built.centroids),
-            built.centroids,
             built.codebooks,
-            "embedding",
-            "vec_id",
+            centroids=built.centroids,
         ).collect()
     }
     got = {

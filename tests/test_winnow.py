@@ -3,6 +3,7 @@ duplicate-cluster accounting, and the boilerplate cap."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from stock_prediction_data_engineering_spark.operators.winnow import winnow_pairs
@@ -279,6 +280,24 @@ def test_index_append_admits_batch(spark, tmp_path):
         (r.new_id, r.corpus_id)
         for r in winnow_index_probe(batch2, path).collect()
     } == {(60, 1), (60, 50)}
+
+
+def test_index_meta_contract(spark, tmp_path):
+    """The index records its build parameters; a probe or append with
+    other k/w/n_buckets would hash other k-grams or prune to the wrong
+    buckets and silently miss hits, so both must fail fast instead."""
+    from stock_prediction_data_engineering_spark.operators.winnow import (
+        winnow_index_probe,
+        winnow_index_write,
+    )
+
+    path = _idx_path(tmp_path)
+    winnow_index_write(_docs(spark, [(1, _FILLER_A + _QUOTE + _FILLER_A)]), path)
+    batch = _docs(spark, [(50, _FILLER_B + _QUOTE)])
+    with pytest.raises(ValueError, match="mismatch"):
+        winnow_index_probe(batch, path, k=20)
+    with pytest.raises(ValueError, match="mismatch"):
+        winnow_index_write(batch, path, n_buckets=32, mode="append")
 
 
 def test_index_probe_matches_standalone_pairs(spark, duck, tmp_path):

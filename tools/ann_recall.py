@@ -19,6 +19,7 @@ Prints one JSON line with recall, scan fraction, and lift per path.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import sys
@@ -58,8 +59,6 @@ def measure(spark, sf_dir: str, k: int = 10, query_mod: int = 101) -> dict:
     # are COUNTED in the probed cells for both configs — identical
     # accounting, so the coarse-vs-fine lift comparison is apples to
     # apples even with unbalanced KMeans cells.
-    import numpy as np
-
     from stock_prediction_data_engineering_spark.operators import pq as pqm
 
     coarse_idx = sim.ivf_build(emb, n_cells=params["n_cells"])
@@ -103,27 +102,23 @@ def measure(spark, sf_dir: str, k: int = 10, query_mod: int = 101) -> dict:
     ivf_rr_idx = sim.ivf_build(emb, n_cells=params["n_cells"], pq_m=8)
     hits_lsh_rr = hits_ivf_rr = scanned_lsh_rr = scanned_ivf_rr = 0
 
+    def _view(idx, qid):
+        """The index over corpus-minus-query."""
+        return dataclasses.replace(idx, table=idx.table.filter(F.col("vec_id") != qid))
+
+    def _scanned(view, part_col, probed):
+        """Rows of ``view`` in the cells/buckets the engine's own probe
+        selection picked — what the search actually scans."""
+        return view.table.filter(F.col(part_col).isin(probed)).count()
+
     def _probe(idx, qvec, qid, nprobe):
         """Search corpus-minus-query and count actually-scanned rows."""
-        q_idx = sim.IvfIndex(
-            idx.table.filter(F.col("vec_id") != qid),
-            idx.centroids,
-            idx.vec_col,
-            idx.id_col,
-        )
+        q_idx = _view(idx, qid)
         found = {
             r.vec_id
             for r in sim.ivf_search(q_idx, qvec, k=k, nprobe=nprobe).collect()
         }
-        qarr = np.array(qvec.first()[0], dtype=float)
-        qn = np.linalg.norm(qarr)
-        if qn > 0:
-            qarr = qarr / qn
-        probed = np.argsort(((idx.centroids - qarr) ** 2).sum(axis=1))[
-            :nprobe
-        ].tolist()
-        scanned = q_idx.table.filter(F.col("ivf_cell").isin(probed)).count()
-        return found, scanned
+        return found, _scanned(q_idx, "ivf_cell", sim.ivf_probe(idx, qvec, nprobe)[1])
 
     for qid in query_ids:
         qvec = emb.filter(F.col("vec_id") == qid).select("embedding")
@@ -141,11 +136,7 @@ def measure(spark, sf_dir: str, k: int = 10, query_mod: int = 101) -> dict:
                 multi_probe=params["multi_probe"],
             ).collect()
         }
-        pq_q = pqm.PqIndex(
-            pq_idx.table.filter(F.col("vec_id") != qid),
-            pq_idx.codebooks,
-            pq_idx.id_col,
-        )
+        pq_q = _view(pq_idx, qid)
         pq_found = {
             r.vec_id for r in pqm.pq_search(pq_q, qvec, k=k).collect()
         }
@@ -163,12 +154,7 @@ def measure(spark, sf_dir: str, k: int = 10, query_mod: int = 101) -> dict:
                 ).collect()
             }
         )
-        ivfpq_q = pqm.IvfPqIndex(
-            ivfpq_idx.table.filter(F.col("vec_id") != qid),
-            ivfpq_idx.centroids,
-            ivfpq_idx.codebooks,
-            ivfpq_idx.id_col,
-        )
+        ivfpq_q = _view(ivfpq_idx, qid)
         hits_ivfpq += len(
             exact
             & {
@@ -192,27 +178,17 @@ def measure(spark, sf_dir: str, k: int = 10, query_mod: int = 101) -> dict:
                 ).collect()
             }
         )
-        qarr2 = np.array(qvec.first()[0], dtype=float)
-        qn2 = np.linalg.norm(qarr2)
-        if qn2 > 0:
-            qarr2 = qarr2 / qn2
-        cell_order = np.argsort(((ivfpq_idx.centroids - qarr2) ** 2).sum(axis=1))
-        probed2 = cell_order[: params["nprobe"]].tolist()
-        scanned_ivfpq += ivfpq_q.table.filter(
-            F.col("ivf_cell").isin(probed2)
-        ).count()
-        scanned_ivfpq_rr += ivfpq_q.table.filter(
-            F.col("ivf_cell").isin(cell_order[: params["nprobe_rerank"]].tolist())
-        ).count()
+        scanned_ivfpq += _scanned(
+            ivfpq_q, "ivf_cell", sim.ivf_probe(ivfpq_idx, qvec, params["nprobe"])[1]
+        )
+        scanned_ivfpq_rr += _scanned(
+            ivfpq_q,
+            "ivf_cell",
+            sim.ivf_probe(ivfpq_idx, qvec, params["nprobe_rerank"])[1],
+        )
         # reranked plain paths: corpus-minus-query views of the hybrid
         # indexes (vectors + codes in the same table)
-        lsh_rr_q = sim.LshIndex(
-            lsh_rr_idx.table.filter(F.col("vec_id") != qid),
-            lsh_rr_idx.num_planes,
-            lsh_rr_idx.vec_col,
-            lsh_rr_idx.id_col,
-            codebooks=lsh_rr_idx.codebooks,
-        )
+        lsh_rr_q = _view(lsh_rr_idx, qid)
         hits_lsh_rr += len(
             exact
             & {
@@ -226,21 +202,14 @@ def measure(spark, sf_dir: str, k: int = 10, query_mod: int = 101) -> dict:
                 ).collect()
             }
         )
-        dots_rr = sim.lsh_plane_dots(qvec, "embedding", params["num_planes"])
-        qb_rr = sum(1 << p for p, d in enumerate(dots_rr) if d > 0)
-        probes_rr = sim.lsh_directed_probes(
-            qb_rr, dots_rr, params["lsh_probe_budget_rerank"]
+        scanned_lsh_rr += _scanned(
+            lsh_rr_q,
+            "bucket",
+            sim.lsh_probe(
+                lsh_rr_idx, qvec, probe_budget=params["lsh_probe_budget_rerank"]
+            )[1],
         )
-        scanned_lsh_rr += lsh_rr_q.table.filter(
-            F.col("bucket").isin(probes_rr)
-        ).count()
-        ivf_rr_q = sim.IvfIndex(
-            ivf_rr_idx.table.filter(F.col("vec_id") != qid),
-            ivf_rr_idx.centroids,
-            ivf_rr_idx.vec_col,
-            ivf_rr_idx.id_col,
-            codebooks=ivf_rr_idx.codebooks,
-        )
+        ivf_rr_q = _view(ivf_rr_idx, qid)
         hits_ivf_rr += len(
             exact
             & {
@@ -254,16 +223,11 @@ def measure(spark, sf_dir: str, k: int = 10, query_mod: int = 101) -> dict:
                 ).collect()
             }
         )
-        qarr3 = np.array(qvec.first()[0], dtype=float)
-        qn3 = np.linalg.norm(qarr3)
-        if qn3 > 0:
-            qarr3 = qarr3 / qn3
-        probed3 = np.argsort(
-            ((ivf_rr_idx.centroids - qarr3) ** 2).sum(axis=1)
-        )[: params["nprobe_rerank"]].tolist()
-        scanned_ivf_rr += ivf_rr_q.table.filter(
-            F.col("ivf_cell").isin(probed3)
-        ).count()
+        scanned_ivf_rr += _scanned(
+            ivf_rr_q,
+            "ivf_cell",
+            sim.ivf_probe(ivf_rr_idx, qvec, params["nprobe_rerank"])[1],
+        )
         ivf, s_ivf = _probe(coarse_idx, qvec, qid, params["nprobe"])
         fine, s_fine = _probe(fine_idx, qvec, qid, params["nprobe_fine"])
         scanned_ivf += s_ivf
@@ -274,13 +238,9 @@ def measure(spark, sf_dir: str, k: int = 10, query_mod: int = 101) -> dict:
         total += len(exact)
         # candidate-set sizes actually examined by the LSH path
         idx = sim.lsh_build(corpus, num_planes=params["num_planes"])
-        qb = (
-            qvec.select(
-                sim.lsh_bucket(F.col("embedding"), params["num_planes"]).alias("b")
-            ).first()[0]
+        scanned_lsh += _scanned(
+            idx, "bucket", sim.lsh_probe(idx, qvec, params["multi_probe"])[1]
         )
-        probes = {qb} | {qb ^ (1 << p) for p in range(params["num_planes"])}
-        scanned_lsh += idx.table.filter(F.col("bucket").isin(sorted(probes))).count()
     f_lsh = scanned_lsh / (len(query_ids) * n_corpus)
     f_ivf = scanned_ivf / (len(query_ids) * n_corpus)
     f_fine = scanned_fine / (len(query_ids) * n_corpus)

@@ -175,6 +175,36 @@ def lint_plan(plan: str) -> list[str]:
     return sorted(set(finds))
 
 
+def plan_findings(df) -> tuple[list[str], list[int]]:
+    """Every finding on one query's plans, before the allowlist: the
+    expression-level lint of the optimized plan plus the physical
+    estimate-blind-broadcast rule — suspicious physical broadcasts not
+    covered by explicit (measured/deliberate) broadcast hints visible
+    in the optimized logical plan. Count-level matching: a query with
+    as many explicit broadcast hints as suspicious exchanges passes —
+    per-site textual matching of physical exchanges to logical hints is
+    not reliable, and the gated operators hint exactly the sides that
+    would otherwise flag. Also returns ``[suspicious, hinted]``."""
+    qe = df._jdf.queryExecution()
+    plan = qe.optimizedPlan().toString()
+    finds = lint_plan(plan)
+    s = suspicious_broadcasts(qe.executedPlan().toString())
+    h = plan.count("strategy=broadcast")
+    if s > h:
+        finds.append(f"estimate-blind-broadcast:{s}>{h}")
+    return finds, [s, h]
+
+
+def allowlist_entry(name: str, find: str) -> tuple[str, str] | None:
+    """The ALLOWLIST entry accepting ``find`` on query ``name`` — the
+    exact finding or its check name without the ``:detail`` — or
+    None."""
+    for key in ((name, find), (name, find.split(":")[0])):
+        if key in ALLOWLIST:
+            return key
+    return None
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
@@ -191,31 +221,10 @@ def main() -> None:
     errors: dict[str, str] = {}
     for name, fn in sorted(registry.QUERIES.items()):
         try:
-            df = fn(spark, args.sf_dir)
-            qe = df._jdf.queryExecution()
-            plan = qe.optimizedPlan().toString()
-            finds = lint_plan(plan)
-            # estimate-blind broadcast: suspicious physical broadcasts
-            # not covered by explicit (measured/deliberate) broadcast
-            # hints visible in the optimized logical plan. Count-level
-            # matching: a query with as many explicit broadcast hints
-            # as suspicious exchanges passes — per-site textual
-            # matching of physical exchanges to logical hints is not
-            # reliable, and the gated operators hint exactly the sides
-            # that would otherwise flag.
-            phys = qe.executedPlan().toString()
-            s = suspicious_broadcasts(phys)
-            h = plan.count("strategy=broadcast")
-            if s or h:
-                broadcasts[name] = [s, h]
-            if s > h:
-                finds.append(f"estimate-blind-broadcast:{s}>{h}")
-            finds = [
-                f
-                for f in finds
-                if (name, f) not in ALLOWLIST
-                and (name, f.split(":")[0]) not in ALLOWLIST
-            ]
+            finds, counts = plan_findings(fn(spark, args.sf_dir))
+            if any(counts):
+                broadcasts[name] = counts
+            finds = [f for f in finds if allowlist_entry(name, f) is None]
             if finds:
                 results[name] = finds
                 print(f"FLAG {name}: {finds}", flush=True)
